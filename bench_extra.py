@@ -6,7 +6,7 @@ labeled jobs (§1.5) and per-phase shuffle/IO byte deltas from the app status
 store, so the `pairs` stage wall (~50% of the fused pipeline) is attributable
 to its sub-kernels: LSH banding/stats, the SimHash UDF, SimHash banding +
 expansion, span anchors UDF, span candidate join, exact tier, pair union,
-verify, span LCS verify, CC label loop, keep policy.
+verify, span LCS verify, connected components, keep policy.
 
 Each phase is checkpointed before the next starts, so phase walls measure one
 operator each (sum of phases > fused wall — attribution, not a headline).

@@ -125,7 +125,8 @@ class DedupConfig:
     # ---- execution --------------------------------------------------------
     #: shuffle partitions; None ⇒ leave session default.
     shuffle_partitions: int | None = None
-    #: max connected-components iterations before declaring non-convergence.
+    #: max Spark contraction rounds of connected components (graphs above the
+    #: driver-collect bound) before raising non-convergence.
     cc_max_iters: int = 25
 
     def __post_init__(self) -> None:

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dedup.assemble import assemble_conversations
-from dedup.cc import connected_components
+from dedup.cc import _LOCAL_EDGES, connected_components
 from dedup.config import DedupConfig
 from dedup.exact import exact_pairs
 from dedup.keep import select_representatives
@@ -388,7 +388,7 @@ class DedupPipeline:
         else:
             # edge count from the stage lineage (exact when the stage was
             # written+counted; -1 for in-memory runs → CC counts its own
-            # checkpointed edges) sizes the label loop's shuffle width
+            # checkpointed edges) picks the driver or Spark CC exit
             n_edges = next(
                 (e["rows"] for e in self._lineage if e["stage"] == "edges"), None
             )
@@ -398,7 +398,7 @@ class DedupPipeline:
                 log=self.log,
                 n_edges=None if n_edges is None or n_edges < 0 else n_edges,
                 input_deduped=True,  # edge stage is one row per pair
-                metrics_out=metrics,  # cc_loop_width / cc_edges / cc_rounds
+                metrics_out=metrics,  # cc_edges / cc_rounds / cc_local_edges / ...
             )
             _before_clusters = persistent_rdd_ids(self.spark)
             clusters = self._materialize(
@@ -426,6 +426,7 @@ class DedupPipeline:
             "span_anchor_mod": cfg.span_anchor_mod,
             "min_span_len": cfg.min_span_len,
             "cc_max_iters": cfg.cc_max_iters,
+            "cc_local_edges_cap": _LOCAL_EDGES,
         }
         metrics["stages"] = self._lineage
         if self.run_dir:

@@ -128,11 +128,12 @@ def batch_simhash(texts: list[str], k: int = 4) -> np.ndarray:
         return np.zeros(0, dtype=np.int64)
     CHUNK = 16384
     votes = np.zeros((n_docs, 64), dtype=np.int64)
-    lane_shifts = np.arange(0, 64, 8, dtype=np.uint64)
     for lo in range(0, H.size, CHUNK):
         hi = min(lo + CHUNK, H.size)
         nrow = hi - lo
-        bits = np.unpackbits(H[lo:hi].view(np.uint8).reshape(nrow, 8), axis=1)
+        # little-endian bytes on any host (a no-op view on little-endian)
+        le = H[lo:hi].astype("<u8", copy=False)
+        bits = np.unpackbits(le.view(np.uint8).reshape(nrow, 8), axis=1)
         d0 = int(np.searchsorted(starts, lo, side="right")) - 1
         d1 = int(np.searchsorted(starts, hi, side="left"))
         seg = np.maximum(starts[d0:d1] - lo, 0)  # doc starts, strictly asc
@@ -148,15 +149,15 @@ def batch_simhash(texts: list[str], k: int = 4) -> np.ndarray:
             sub = np.sort(np.concatenate([seg, extra]))
         else:
             sub = seg
-        # SWAR segment sum: 8 uint8 lanes per uint64 word, ≤128 ones/lane
+        # SWAR segment sum: 8 uint8 lanes per uint64 word, ≤128 ones/lane,
+        # so no lane carries into its neighbour and the sum's bytes are the
+        # lane sums in memory order (= bit column order) on any host
         words = bits.view(np.uint64).reshape(nrow, 8)
         with np.errstate(over="ignore"):
             ssum = np.add.reduceat(words, sub, axis=0)  # (n_sub, 8 words)
-        lanes = (
-            (ssum[:, :, None] >> lane_shifts[None, None, :]) & np.uint64(0xFF)
-        ).astype(np.int64)  # [sub, word, lane] → bit column = 8·word + lane
+        lanes = ssum.view(np.uint8).astype(np.int64)  # (n_sub, 64 bit columns)
         sub_doc = (np.searchsorted(seg, sub, side="right") - 1) + d0
-        np.add.at(votes, sub_doc, lanes.reshape(-1, 64))
+        np.add.at(votes, sub_doc, lanes)
     fp_bits = (votes * 2 > counts[:, None]).astype(np.uint64)
     fp = (fp_bits << np.arange(64, dtype=np.uint64)[None, :]).sum(
         axis=1, dtype=np.uint64

@@ -4,10 +4,15 @@ same signature config)."""
 
 from __future__ import annotations
 
+from unittest import mock
+
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+import dedup.cc
 from dedup.assemble import assemble_conversations
 from dedup.cc import connected_components
 from dedup.config import DedupConfig
@@ -92,6 +97,81 @@ def test_cc_chains_and_determinism(spark):
         "x": "x", "y": "x",
         "p": "p", "q": "p", "r": "p", "s": "p",
     }
+
+
+def _uf_oracle(pairs):
+    """Pure-Python union-find: node -> min node of its component (Python
+    str order = code point order = Spark's binary UTF-8 order)."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def _cc_both_exits(spark, pairs, **kw):
+    """Labels and metrics from the driver exit, then from the Spark rounds
+    (bound 0 forces contraction until the components are stars)."""
+    edges = spark.createDataFrame(pairs, "conv_a string, conv_b string")
+    out = []
+    for bound in (dedup.cc._LOCAL_EDGES, 0):
+        m: dict = {}
+        with mock.patch.object(dedup.cc, "_LOCAL_EDGES", bound):
+            rows = connected_components(edges, metrics_out=m, **kw).collect()
+        out.append(({r.conv_id: r.cluster_id for r in rows}, m))
+    return out
+
+
+@pytest.mark.parametrize("n", [200, 10_000])
+def test_cc_long_chains_converge_on_both_exits(spark, n):
+    """A path graph is the deepest component per edge; min-label propagation
+    needed one hop per link and raised on a 200-link chain."""
+    chain = [(f"n{i:05d}", f"n{i + 1:05d}") for i in range(n - 1)]
+    (local, m_local), (stars, m_stars) = _cc_both_exits(spark, chain)
+    assert local == stars == {f"n{i:05d}": "n00000" for i in range(n)}
+    assert m_local["cc_rounds"] == 1 and m_local["cc_local_edges"] == n - 1
+    assert m_stars["cc_local_edges"] == 0
+    assert 1 < m_stars["cc_rounds"] <= 25  # O(log n) contraction rounds
+
+
+def test_cc_min_label_is_code_point_order(spark):
+    """U+FFFD < U+1F600 by code point (Spark, Python, UTF-8 bytes); Java
+    String order (UTF-16 units) says the opposite — the label must not."""
+    pairs = [("\U0001f600", "\ufffd"), ("\U0001f600", "\U0001f601"), ("é", "z")]
+    for labels, _ in _cc_both_exits(spark, pairs):
+        assert labels == {
+            "\ufffd": "\ufffd", "\U0001f600": "\ufffd", "\U0001f601": "\ufffd",
+            "é": "z", "z": "z",
+        }
+
+
+def test_cc_nonconvergence_raises(spark):
+    """Out of Spark rounds is an error, never a truncated labeling."""
+    chain = spark.createDataFrame(
+        [(f"n{i:04d}", f"n{i + 1:04d}") for i in range(999)], "conv_a string, conv_b string"
+    )
+    with mock.patch.object(dedup.cc, "_LOCAL_EDGES", 0), pytest.raises(RuntimeError):
+        connected_components(chain, max_iters=1)
+
+
+_node = st.text(alphabet=["a", "b", "z", "é", "\ufffd", "\U0001f600"], min_size=1, max_size=2)
+
+
+@settings(max_examples=10, deadline=None)
+@given(st.lists(st.tuples(_node, _node).filter(lambda e: e[0] != e[1]), max_size=20))
+def test_cc_random_graphs_match_union_find(spark, pairs):
+    want = _uf_oracle(pairs)
+    for labels, _ in _cc_both_exits(spark, pairs):
+        assert labels == want
 
 
 def test_band_bucket_cap_star_fallback(spark):

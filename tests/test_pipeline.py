@@ -246,6 +246,7 @@ def test_caps_audit_in_metrics(spark, turns_df, tmp_path_factory):
         "span_anchor_mod": cfg.span_anchor_mod,
         "min_span_len": cfg.min_span_len,
         "cc_max_iters": cfg.cc_max_iters,
+        "cc_local_edges_cap": 1 << 20,
     }
     # the caps BOUND: overflow counters are present and non-zero for lsh
     # (exact-copy groups make >2-member band buckets by construction)
