@@ -201,14 +201,7 @@ def main() -> None:
         "left_semi",
     )
     _noop_write(
-        DedupPipeline(
-            spark,
-            DedupConfig(),
-            fused=os.environ.get("SPARK_GRAFT_BENCH_FUSED", "1") == "1",
-            tier_metrics=False,
-        )
-        .run(wslice)
-        .clusters
+        DedupPipeline(spark, DedupConfig(), tier_metrics=False).run(wslice).clusters
     )
     _fas(spark)
 
@@ -222,10 +215,9 @@ def main() -> None:
     # fact; each rep carries a SAME-MOMENT spin sample so the reported
     # best-rep wall has its own host-speed context in the JSON.
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
-    # fused + no tier-metric jobs: the benchmark measures the dedup dataflow,
-    # not optional accounting; fused correctness is pinned by
-    # tests/test_pipeline.py::test_fused_run_identical_clusters
-    fused = os.environ.get("SPARK_GRAFT_BENCH_FUSED", "1") == "1"
+    # no tier-metric job: the benchmark measures the dedup dataflow, not
+    # optional accounting; equal clusters are pinned by
+    # tests/test_pipeline.py::test_tier_metrics_off_identical_clusters
     n_procs = int(CPUS) if str(CPUS).isdigit() else (os.cpu_count() or 8)
     # refuse-starved-hosts gate (VERDICT r04 #1): wait for a qualifying
     # window before the first rep; re-check (short budget) before later reps
@@ -237,9 +229,7 @@ def main() -> None:
         if rep:
             gates.append(host_gate(n_procs, budget_sec=GATE_MAX_WAIT_SEC / 3))
         t0 = time.monotonic()
-        result = DedupPipeline(
-            spark, DedupConfig(), fused=fused, tier_metrics=not fused
-        ).run(turns)
+        result = DedupPipeline(spark, DedupConfig(), tier_metrics=False).run(turns)
         _noop_write(result.clusters)
         walls.append(time.monotonic() - t0)
         stage_walls.append(
@@ -270,7 +260,6 @@ def main() -> None:
         "qualified": all(g["qualified"] for g in gates),
         "reps": gates,
     }
-    extras["fused"] = fused
 
     if os.environ.get("SPARK_GRAFT_BENCH_ONLY") == "pipeline_synth":
         print(
@@ -297,9 +286,9 @@ def main() -> None:
     dres = DedupPipeline(spark, DedupConfig(min_span_len=150)).run(dturns)
     _noop_write(dres.clusters)
     timings["pipeline_testdata"] = round(time.monotonic() - t0, 3)
-    # attribution: this run is UNFUSED with tier metrics on (the accounting
-    # path), unlike the fused pipeline_synth — record its stage walls so a
-    # regression is decomposable from the JSON alone
+    # attribution: this run has tier metrics on (the accounting job), unlike
+    # pipeline_synth — record its stage walls so a regression is
+    # decomposable from the JSON alone
     extras["pipeline_testdata_stage_walls"] = {
         s["stage"]: s["seconds"] for s in dres.metrics["stages"]
     }
@@ -314,7 +303,11 @@ def main() -> None:
     conv = assemble_conversations(turns).localCheckpoint()
 
     t0 = time.monotonic()
-    sigs = with_minhash(conv).select("conv_id", "minhash").localCheckpoint()
+    sigs = (
+        with_minhash(conv, input_materialized=True)
+        .select("conv_id", "minhash")
+        .localCheckpoint()
+    )
     timings["minhash_signatures"] = round(time.monotonic() - t0, 3)
 
     t0 = time.monotonic()

@@ -3,13 +3,13 @@ driver bench; bench.py is frozen for measurement).
 
 Runs every pipeline sub-operator in isolation with noop sinks (guide §1.4),
 labeled jobs (§1.5) and per-phase shuffle/IO byte deltas from the app status
-store, so the `pairs` stage wall (~50% of the fused pipeline) is attributable
+store, so the `pairs` stage wall (~50% of the pipeline) is attributable
 to its sub-kernels: LSH banding/stats, the SimHash UDF, SimHash banding +
 expansion, span anchors UDF, span candidate join, exact tier, pair union,
 verify, span LCS verify, connected components, keep policy.
 
 Each phase is checkpointed before the next starts, so phase walls measure one
-operator each (sum of phases > fused wall — attribution, not a headline).
+operator each (sum of phases > pipeline wall — attribution, not a headline).
 
 Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python bench_extra.py
 Optional: BENCH_EXTRA_EXPLAIN=plans/r06 dumps .explain("formatted") per phase.
@@ -92,18 +92,15 @@ def main() -> None:
         "conv_id",
         "left_semi",
     )
-    noop(
-        DedupPipeline(spark, cfg, fused=True, tier_metrics=False).run(wslice).clusters
-    )
+    noop(DedupPipeline(spark, cfg, tier_metrics=False).run(wslice).clusters)
     free_all_scratch(spark)
     spin0 = spin_calibration(int(CPUS))
 
     # ---- phase decomposition -------------------------------------------
-    from dedup.assemble import turn_filters
     from dedup.exact import exact_pairs
-    from dedup.lsh import band_buckets, bucketed_pairs, candidate_pairs
+    from dedup.lsh import bucketed_pairs, candidate_pairs
     from dedup.simhash import simhash_conv_pairs, with_turn_simhash
-    from dedup.suffix import doc_anchors, span_candidate_pairs, verify_span_pairs
+    from dedup.suffix import doc_anchors, verify_span_pairs
     from dedup.verify import verify_pairs
 
     conv = phase(
@@ -111,12 +108,12 @@ def main() -> None:
     )
     sigs = phase(
         "minhash_udf",
-        lambda: with_minhash(conv, cfg, repartition="auto")
+        lambda: with_minhash(conv, cfg, input_materialized=True)
         .select("conv_id", "minhash")
         .localCheckpoint(),
     )
 
-    lsh_pairs_df, _ov = candidate_pairs(sigs, cfg, materialize=False, dedup=False)
+    lsh_pairs_df, _ov = candidate_pairs(sigs, cfg, dedup=False)
     dump_explain("lsh_pairs", lsh_pairs_df)
     lsh_pairs_df = phase("lsh_pairs", lambda: lsh_pairs_df.localCheckpoint())
 
@@ -128,7 +125,7 @@ def main() -> None:
         .select("conv_id", "turn_idx", "simhash")
         .localCheckpoint(),
     )
-    sim_pairs_df, _ovs = simhash_conv_pairs(sh, cfg, materialize=False, return_overflow=True)
+    sim_pairs_df, _ovs = simhash_conv_pairs(sh, cfg, return_overflow=True)
     dump_explain("simhash_pairs", sim_pairs_df)
     sim_pairs_df = phase("simhash_pairs", lambda: sim_pairs_df.localCheckpoint())
 
@@ -137,7 +134,7 @@ def main() -> None:
         lambda: doc_anchors(conv, cfg, input_materialized=True).localCheckpoint(),
     )
     raw, _ova = bucketed_pairs(
-        anchors, ["anchor_hash"], ["conv_id"], cfg.band_bucket_cap, materialize=False
+        anchors, ["anchor_hash"], ["conv_id"], cfg.band_bucket_cap
     )
     min_shared = max(2, cfg.min_span_len // (4 * cfg.span_anchor_mod))
     span_cand_df = (

@@ -50,38 +50,17 @@ def bucketed_pairs(
     bucket_cols: list[str],
     member_cols: list[str],
     cap: int,
-    materialize: bool = True,
-    kernel: str = "stats",
 ) -> tuple[DataFrame, DataFrame]:
-    """Size-routed candidate pairing, shared by the LSH and SimHash tiers.
+    """Size-routed candidate pairing, shared by the LSH, SimHash and span
+    tiers.
 
-    Two selectable kernels build the per-bucket (s, m0, m1) stats table
-    (``kernel`` — plumbed from ``DedupConfig.pairs_kernel``, default
-    ``stats``):
+    ONE wide aggregation builds the per-bucket (s, m0, m1) stats table —
+    (count, min(m), max(m)) per bucket. A count-first variant (keys-only
+    pass, members fetched for duplicate buckets only) lost the recorded A/B
+    at these member widths: ≤ 9% fewer shuffle bytes for +3 / +15 stages
+    and worse walls (BENCH/BASELINE.md r05).
 
-    - ``stats`` (default): ONE wide aggregation — (count, min(m), max(m))
-      per bucket — so member structs cross the shuffle twice (partial min
-      + partial max) even for singleton buckets that are about to die.
-    - ``counts``: count-only pass 1 (the exchange carries just the bucket
-      key + a partial count), then a second aggregation fetches members
-      for the surviving duplicate buckets only.
-
-    The default is decided by RECORDED shuffle bytes + stage counts, not
-    theory (tools/kernel_ab.py, sf0.1, byte-identical input, both kernels
-    in one session — bytes are deterministic for a fixed plan, immune to
-    this host's 3× wall noise): with the narrow member structs these tiers
-    actually carry (a short ``conv_id`` string, or (conv_id, turn_idx)),
-    counts-first saves only 9% bytes on the LSH tier (127.7 vs 140.3 MB)
-    and 3.7% on the SimHash tier (330.9 vs 343.1 MB) while adding 3 and 15
-    stages respectively — and its walls were consistently worse at
-    comparable same-moment spins (LSH 19.0 vs 13.3 s; SimHash 34.8 vs
-    23.7 s). The r03/r04 prose predicted members dominate the exchange;
-    the recorded bytes refute that at this member width. ``counts`` stays
-    selectable for workloads whose member structs are genuinely wide
-    (large payload columns), where the twice-shuffled-members term grows
-    with member width while the keys-only pass does not.
-
-    Routing by bucket size s (unchanged — results identical):
+    Routing by bucket size s:
     - s == 2 (the dominant duplicate shape): the pair is (min, max)
       directly from the stats row — zero arrays, zero extra shuffle;
     - 2 < s ≤ cap: membership join + sorted-array posexplode pairing —
@@ -90,51 +69,19 @@ def bucketed_pairs(
       plus an overflow-metric row — mega-buckets are never silently
       dropped and never materialize a multi-GB aggregation row.
 
-    The ``counts`` and ``stats`` tables (duplicate buckets only — tiny)
-    are ALWAYS checkpointed: several subtrees consume them (pass-2 join,
-    s==2 pairs, the s>2 membership join, the overflow metric) and exchange
-    reuse does not span them. ``materialize=True`` additionally checkpoints
-    the banded rows, for callers whose row source is not already
-    materialized — pass 2 and the membership join re-read them, and
-    without a cut their upstream (a signature UDF, a parquet scan) would
-    run once per consumer.
+    The stats table (duplicate buckets only — tiny) is checkpointed:
+    several subtrees consume it (s==2 pairs, the s>2 membership join, the
+    overflow metric) and exchange reuse does not span them. ``rows`` is
+    read twice (the stats aggregation and the membership join), so callers
+    hand over MATERIALIZED rows or a narrow pass over them — every caller
+    in the pipeline does; a caller with a UDF in ``rows``'s lineage
+    checkpoints it first, or the UDF runs once per consumer.
 
     Returns (pairs(a: struct, b: struct), overflow(bucket_cols, bucket_n)),
     with a < b in member-struct order (first member column ascending).
     """
-    from dedup.util import narrow_plan
-
     m = F.struct(*[F.col(c) for c in member_cols])
     keyed = rows.select(*bucket_cols, m.alias("m"))
-    # the banded rows have exactly two consumers (the stats aggregation and
-    # the s>2 membership join). Checkpoint them ONLY when re-computing is
-    # expensive (a UDF or shuffle in the lineage): banding over an
-    # already-materialized signature table is a narrow project+explode+
-    # xxhash64 pass, and re-running it twice beats writing + re-reading a
-    # banded-rows checkpoint (measured r06: the banding scan is 1.3 s at
-    # sf0.1 while the elided checkpoint was a 150 MB write + two reads;
-    # best lsh_pairs micro sample 3.82 s vs the 4.45-4.60 s r05/baseline)
-    if materialize and not narrow_plan(keyed):
-        keyed = keyed.localCheckpoint()
-    if kernel == "counts":
-        # count-first variant: fewer shuffle bytes (members move only for
-        # duplicate buckets) but 3 extra stages; selectable for
-        # wide-member workloads and same-session A/Bs (tools/kernel_ab.py)
-        counts = (
-            keyed.groupBy(*bucket_cols)
-            .agg(F.count(F.lit(1)).alias("s"))
-            .where(F.col("s") > 1)  # singleton buckets can't pair (≈ F3)
-        ).localCheckpoint()
-        stats = (
-            keyed.join(counts.select(*bucket_cols), list(bucket_cols))
-            .groupBy(*bucket_cols)
-            .agg(
-                F.count(F.lit(1)).alias("s"),
-                F.min("m").alias("m0"),
-                F.max("m").alias("m1"),
-            )
-        ).localCheckpoint()
-        return route_bucket_pairs(keyed, stats, bucket_cols, cap)
     stats = (
         keyed.groupBy(*bucket_cols)
         .agg(
@@ -153,11 +100,11 @@ def route_bucket_pairs(
     """Size-routed pair emission from precomputed bucket stats (see
     ``bucketed_pairs``, which builds the stats; callers that already have a
     per-bucket (s, m0, m1) aggregation — e.g. the SimHash exact-fingerprint
-    path, which shares its kernel split with the banding paths — call
-    this directly and skip the extra
-    shuffle). ``keyed`` = (bucket_cols..., m: struct); ``stats`` =
-    (bucket_cols..., s, m0, m1) with s > 1, and should be materialized (its
-    three consumers get no exchange reuse)."""
+    path, whose one aggregation also feeds its distinct-fingerprint list —
+    call this directly and skip the extra shuffle). ``keyed`` =
+    (bucket_cols..., m: struct); ``stats`` = (bucket_cols..., s, m0, m1)
+    with s > 1, and should be materialized (its three consumers get no
+    exchange reuse)."""
     if cap < 2:
         # the s==2 fast path is unconditional; a cap below 2 would emit a
         # size-2 bucket BOTH as a fast-path pair and a star edge, and the
@@ -168,7 +115,7 @@ def route_bucket_pairs(
     )
     multi = stats.where(F.col("s") > 2)
     # membership is needed only for s>2 buckets — re-read the (cheap,
-    # usually checkpointed) banded rows and keep just those buckets
+    # narrow-over-materialized) banded rows and keep just those buckets
     joined = keyed.join(
         multi.select(*bucket_cols, "s", "m0"), list(bucket_cols)
     )
@@ -193,17 +140,19 @@ def route_bucket_pairs(
 def candidate_pairs(
     signatures: DataFrame,
     cfg: DedupConfig | None = None,
-    materialize: bool = True,
     dedup: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """LSH candidate pairs (conv_a < conv_b, source='lsh') plus a one-row-per
     overflowed-bucket metrics DataFrame (band_id, band_hash, bucket_n).
 
-    ``materialize`` checkpoints the per-bucket stats table so the pair
-    routing and the overflow metric read one computation of the banding.
-    ``dedup=False`` skips the per-pair dropDuplicates shuffle — for callers
-    (the pipeline) that immediately groupBy the union of all tiers' pairs
-    anyway; standalone callers keep the default one-row-per-pair contract.
+    ``signatures`` should be materialized (a stage write or a checkpoint):
+    banding is a narrow project + explode + xxhash64 pass that
+    ``bucketed_pairs`` re-runs for its two consumers, which is cheaper
+    than checkpointing the banded rows, but a signature UDF in the lineage
+    would run twice. ``dedup=False`` skips the per-pair dropDuplicates
+    shuffle — for callers (the pipeline) that immediately groupBy the union
+    of all tiers' pairs anyway; standalone callers keep the default
+    one-row-per-pair contract.
     """
     cfg = cfg or DedupConfig()
     buckets = band_buckets(signatures, cfg)
@@ -212,8 +161,6 @@ def candidate_pairs(
         ["band_id", "band_hash"],
         ["conv_id"],
         cfg.band_bucket_cap,
-        materialize=materialize,
-        kernel=cfg.pairs_kernel,
     )
     pairs = raw.select(
         F.col("a.conv_id").alias("conv_a"), F.col("b.conv_id").alias("conv_b")

@@ -69,27 +69,38 @@ _ROLL_BASE_INV = np.uint64(pow(int(_ROLL_BASE), -1, 1 << 64))
 
 #: per-process cache of the geometric power series B^i / B^-i used by every
 #: rolling-hash kernel (minhash shingles, simhash grams, span anchors, LCS
-#: prefix arrays). The series depends only on its base, so one growing array
-#: serves every batch; np.cumprod is a sequential scan re-run per batch
-#: (measured 2× the whole window-hash kernel), while the doubling fill below
-#: runs log2(n) vectorized multiplies ONCE per process.
+#: prefix arrays). The series depends only on its base, so one array serves
+#: every batch; np.cumprod is a sequential scan re-run per batch (measured
+#: 2× the whole window-hash kernel), while the doubling fill below runs
+#: log2(n) vectorized multiplies. Cached series are at most
+#: ``_POW_CACHE_MAX`` elements (32 MiB per base); a longer request is
+#: computed uncached, so a worker never keeps a series sized by the largest
+#: batch buffer it has ever seen.
 _POW_CACHE: dict[int, np.ndarray] = {}
+_POW_CACHE_MAX = 1 << 22
+
+
+def _fill_pow_series(base: np.uint64, size: int) -> np.ndarray:
+    b = np.empty(size, dtype=np.uint64)
+    b[0] = 1
+    m = 1
+    with np.errstate(over="ignore"):
+        while m < size:
+            step = min(m, size - m)
+            np.multiply(b[:step], b[m - 1] * base, out=b[m : m + step])
+            m += step
+    return b
 
 
 def _pow_series(base: np.uint64, n: int) -> np.ndarray:
-    """First ``n`` powers of ``base`` mod 2^64 (cached, grow-only)."""
+    """First ``n`` powers of ``base`` mod 2^64 (cached up to
+    ``_POW_CACHE_MAX`` elements)."""
+    if n > _POW_CACHE_MAX:
+        return _fill_pow_series(base, n)
     arr = _POW_CACHE.get(int(base))
     if arr is None or arr.size < n:
         size = max(n, 1 << 20)
-        b = np.empty(size, dtype=np.uint64)
-        b[0] = 1
-        m = 1
-        with np.errstate(over="ignore"):
-            while m < size:
-                step = min(m, size - m)
-                np.multiply(b[:step], b[m - 1] * base, out=b[m : m + step])
-                m += step
-        _POW_CACHE[int(base)] = arr = b
+        _POW_CACHE[int(base)] = arr = _fill_pow_series(base, size)
     return arr[:n]
 
 
@@ -138,7 +149,9 @@ def shingle_hashes(text: str, k: int) -> np.ndarray:
         return np.unique(_mix64(h))
 
 
-def batch_window_hashes(texts, k: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+def batch_window_hashes(
+    texts: list[str | bytes], k: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Mixed uint64 k-byte-window hashes for a WHOLE batch of texts in one
     vectorized pass: all bytes are concatenated, one sliding-window matmul
     computes every window hash, and windows crossing document boundaries are
@@ -297,35 +310,25 @@ def make_minhash_udf(cfg: DedupConfig):
 
 
 def with_minhash(
-    conversations: DataFrame, cfg: DedupConfig | None = None, repartition: bool | str = True
+    conversations: DataFrame,
+    cfg: DedupConfig | None = None,
+    input_materialized: bool = False,
 ) -> DataFrame:
     """Attach a ``minhash: array<int>`` column computed from the normalized doc.
 
-    ``repartition`` spreads rows across the cluster's full parallelism
-    first: signature cost scales with ROWS, while upstream AQE coalesces
-    shuffle output by BYTES — without this, a text corpus that fits in a
-    couple of 64 MB partitions runs the UDF on a couple of cores.
-    ``repartition="auto"`` (for MATERIALIZED inputs only — checkpointed or
-    parquet-backed) reads the real partition count and skips the full-text
-    shuffle when the input is already wide enough.
+    Rows are spread across the cluster's full parallelism first: signature
+    cost scales with ROWS, while upstream AQE coalesces shuffle output by
+    BYTES — without this, a text corpus that fits in a couple of 64 MB
+    partitions runs the UDF on a couple of cores. ``input_materialized``
+    (checkpointed or parquet-backed input) reads the real partition count
+    and skips the full-text shuffle when the input is already wide enough;
+    see ``util.spread_for_udf``.
     """
     from dedup.util import spread_for_udf
 
-    from dedup.util import narrow_plan
-
     cfg = cfg or DedupConfig()
     udf = make_minhash_udf(cfg)
-    if repartition == "auto":
-        conversations = spread_for_udf(conversations, materialized=True)
-    elif repartition:
-        # repartition=True callers may hand a MATERIALIZED frame (the bench
-        # micro passes a localCheckpoint): when the plan is narrow over
-        # materialized bytes, reading the real partition count is free and
-        # skips an unconditional full-doc-text shuffle (same contract —
-        # rows are spread to >= cluster parallelism either way)
-        conversations = spread_for_udf(
-            conversations, materialized=narrow_plan(conversations)
-        )
+    conversations = spread_for_udf(conversations, materialized=input_materialized)
     return conversations.withColumn("minhash", udf(_normalize_expr(F.col("doc"))))
 
 
@@ -346,7 +349,9 @@ _LOWER_LUT = np.arange(256, dtype=np.uint8)
 _LOWER_LUT[65:91] += 32  # A-Z → a-z
 
 
-def batch_ws_normalize_bytes(texts, cap: int | None = None) -> list[bytes]:
+def batch_ws_normalize_bytes(
+    texts: list[str | None], cap: int | None = None
+) -> list[bytes]:
     """UTF-8 bytes of ``py_normalize(t)[:cap]`` for every text, vectorized.
 
     ASCII texts (the overwhelming majority) take ONE numpy pass over the

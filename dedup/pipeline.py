@@ -71,15 +71,13 @@ class DedupPipeline:
         tier_metrics: bool = True,
         concurrent: bool = True,
     ):
-        """``fused=True`` skips the tier-internal checkpoints (sized LSH
-        buckets, simhash turn/turn-pair tables, anchor tables): Spark's
-        exchange reuse computes each self-joined intermediate once per
-        action anyway, so a fused run collapses ~6 eager materializations
-        into the stage writes — lower fixed cost per job, at the price of
-        recomputing tier lineage if a stage-level retry or the
-        overflow-metrics job re-reads it (pair a fused benchmark run with
-        ``tier_metrics=False``). Stage checkpoints (and resume) are
-        unaffected.
+        """Each tier has one materialization design: UDF outputs are
+        materialized (a stage write or a checkpoint), small tables that
+        several subtrees read (bucket stats) are checkpointed, and
+        single-consumer pair tables are not.
+
+        ``tier_metrics=False`` skips the one job that counts the tiers'
+        overflow rows and records the skip in ``metrics``.
 
         ``concurrent=True`` (default) builds the independent fingerprint
         tiers in parallel driver threads: the signature UDF + LSH stats,
@@ -100,7 +98,7 @@ class DedupPipeline:
         self.enable_span = enable_span
         self.keep_policy = keep_policy
         self.log = log or (lambda msg: None)
-        self.fused = fused
+        del fused  # accepted with no effect: perfbench/run.py still passes it
         self.tier_metrics = tier_metrics
         self.concurrent = concurrent
         self._lineage: list[dict] = []
@@ -209,7 +207,6 @@ class DedupPipeline:
         # narrow phases of one tier overlap the wide phases of another.
         # Resume guards unchanged: a tier's kernels are never even
         # constructed when the stage consuming them is already on disk.
-        mat = not self.fused
         pairs_done = self._done("pairs")
         edges_done = self._done("edges")
         span_needed = self.enable_span and not edges_done
@@ -219,16 +216,16 @@ class DedupPipeline:
         def t_signatures():
             sigs = self._materialize(
                 "signatures",
-                with_minhash(conv, cfg, repartition="auto").select("conv_id", "minhash"),
+                with_minhash(conv, cfg, input_materialized=True).select(
+                    "conv_id", "minhash"
+                ),
             )
             tier["sigs"] = sigs
             if not pairs_done:
                 # dedup=False: the strongest-source groupBy below is the
                 # single pair-dedup shuffle for every tier — a per-tier
                 # dropDuplicates would shuffle the same pair set twice
-                lsh_pairs, lsh_overflow = candidate_pairs(
-                    sigs, cfg, materialize=mat, dedup=False
-                )
+                lsh_pairs, lsh_overflow = candidate_pairs(sigs, cfg, dedup=False)
                 tier["lsh"] = lsh_pairs
                 overflow_dfs["lsh_overflow_buckets"] = lsh_overflow
 
@@ -252,25 +249,17 @@ class DedupPipeline:
             # cost matters), and an unconditional repartition would shuffle
             # the FULL raw text payload (measured: 1.3 GB moved for nothing
             # at 6.4M turns; walls equal at same-moment host speed).
-            # ALWAYS materialize the per-turn simhash table (fused or not):
-            # the stats-first pair kernel reads the banded rows from two
-            # subtrees (the stats agg + the s>2 membership join), and
-            # without a checkpoint the simhash UDF — the most expensive
-            # kernel in the stage — would run once per subtree
+            # materialize the per-turn simhash table: the pair kernel reads
+            # it from two subtrees (the fingerprint stats + the expansion
+            # join), and without a checkpoint the simhash UDF — the most
+            # expensive kernel in the stage — would run once per subtree
             sh = (
                 with_turn_simhash(turns_f, cfg)
                 .select("conv_id", "turn_idx", "simhash")
                 .localCheckpoint()
             )
-            # materialize=False in BOTH modes: the turn-pair table has
-            # exactly ONE consumer (the coverage aggregation inside
-            # simhash_conv_pairs) and its expensive inputs (the turn-simhash
-            # table above, the fp stats tables) are already checkpointed —
-            # the unfused path paid a ~1M-row write+read for nothing
-            # (tools/testdata_ab.py: 9.49 vs 9.75 s warm at matched spins,
-            # clusters bit-identical; the fused path already elided it)
             sh_pairs, sh_overflow = simhash_conv_pairs(
-                sh, cfg, materialize=False, return_overflow=True
+                sh, cfg, return_overflow=True
             )
             tier["simhash"] = sh_pairs
             overflow_dfs["simhash_overflow_buckets"] = sh_overflow
@@ -280,7 +269,7 @@ class DedupPipeline:
             # later, anti-joined against the already-accepted edge set, so
             # building candidates early costs nothing extra
             span_cand, span_overflow = span_candidate_pairs(
-                conv, cfg, materialize=mat, input_materialized=True
+                conv, cfg, input_materialized=True
             )
             tier["span_cand"] = span_cand
             overflow_dfs["span_overflow_anchors"] = span_overflow

@@ -49,7 +49,7 @@ _LOWER_LUT = np.arange(256, dtype=np.uint8)
 _LOWER_LUT[65:91] += 32  # A-Z → a-z
 
 
-def batch_hard_normalize_bytes(texts) -> list[bytes]:
+def batch_hard_normalize_bytes(texts: list[str | None]) -> list[bytes]:
     """UTF-8 bytes of ``_hard_normalize(t)`` for every text, vectorized.
 
     ASCII texts (the overwhelming majority of any tokenised corpus) take ONE
@@ -387,7 +387,7 @@ def _band_structs(cfg: DedupConfig, nb: int, col: str = "simhash") -> list:
 
 
 def simhash_turn_pairs(
-    turns_sh: DataFrame, cfg: DedupConfig | None = None, dedup: bool = True
+    turns_sh: DataFrame, cfg: DedupConfig | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """(conv_id, turn_idx, simhash) → turn-level near-exact pairs.
 
@@ -416,6 +416,10 @@ def simhash_turn_pairs(
 
     Star edges still face the exact cross-conv/hamming filters; a capped
     member's pairs beyond its anchor flow through connected components.
+
+    ``turns_sh`` should be materialized: the fingerprint aggregation and
+    the expansion join both read it, so a SimHash UDF in its lineage would
+    run twice (the pipeline checkpoints the per-turn table).
     """
     from dedup.lsh import bucketed_pairs, route_bucket_pairs
 
@@ -437,41 +441,19 @@ def simhash_turn_pairs(
 
     # One aggregation over the turn table feeds path 1 (duplicate
     # fingerprint groups), path 2 (the distinct-fingerprint list + its
-    # count), and the block picker. Default kernel is the one-pass stats
-    # aggregation: the count-first split saves only 3.7% shuffle bytes on
-    # this tier (330.9 vs 343.1 MB recorded, tools/kernel_ab.py — the
-    # (conv_id, turn_idx) member struct is narrow) while adding 15 stages
-    # and consistently worse walls (34.8 vs 23.7 s at comparable spins).
-    # ``counts`` stays selectable (cfg.pairs_kernel) for wide-member
-    # workloads and A/Bs.
+    # count), and the block picker.
     m0 = F.struct("conv_id", "turn_idx")
     keyed0 = t.select("simhash", m0.alias("m"))
-    if cfg.pairs_kernel == "counts":
-        fp_counts = (
-            t.groupBy("simhash").agg(F.count(F.lit(1)).alias("s")).localCheckpoint()
+    fp_counts = (
+        t.groupBy("simhash")
+        .agg(
+            F.count(F.lit(1)).alias("s"),
+            F.min(m0).alias("m0"),
+            F.max(m0).alias("m1"),
         )
-        dup_fps = fp_counts.where(F.col("s") > 1).select("simhash")
-        stats0 = (
-            keyed0.join(dup_fps, "simhash")
-            .groupBy("simhash")
-            .agg(
-                F.count(F.lit(1)).alias("s"),
-                F.min("m").alias("m0"),
-                F.max("m").alias("m1"),
-            )
-            .localCheckpoint()
-        )
-    else:
-        fp_counts = (
-            t.groupBy("simhash")
-            .agg(
-                F.count(F.lit(1)).alias("s"),
-                F.min(m0).alias("m0"),
-                F.max(m0).alias("m1"),
-            )
-            .localCheckpoint()
-        )
-        stats0 = fp_counts.where(F.col("s") > 1)
+        .localCheckpoint()
+    )
+    stats0 = fp_counts.where(F.col("s") > 1)
 
     # (1) exact fingerprint groups — no banding, one row per turn
     raw0, ov0 = route_bucket_pairs(
@@ -489,8 +471,7 @@ def simhash_turn_pairs(
         "simhash", F.explode(F.array(*_band_structs(cfg, nb))).alias("c")
     ).select("simhash", "c.chunk_id", "c.chunk_val")
     rawf, ovf = bucketed_pairs(
-        banded, ["chunk_id", "chunk_val"], ["simhash"], cfg.band_bucket_cap,
-        materialize=False, kernel=cfg.pairs_kernel,
+        banded, ["chunk_id", "chunk_val"], ["simhash"], cfg.band_bucket_cap
     )
     fp_pairs = (
         rawf.select(F.col("a.simhash").alias("fa"), F.col("b.simhash").alias("fb"))
@@ -516,7 +497,7 @@ def simhash_turn_pairs(
     exp_rows = t.join(sides, "simhash")  # sides is small → AQE broadcast
     raw1, ov1 = bucketed_pairs(
         exp_rows, ["fa", "fb", "fham"], ["conv_id", "turn_idx", "simhash"],
-        cfg.band_bucket_cap, materialize=False, kernel=cfg.pairs_kernel,
+        cfg.band_bucket_cap,
     )
     pairs1 = _turn_pairs(
         # same-fp pairs inside an expansion bucket are path-1 territory
@@ -524,11 +505,9 @@ def simhash_turn_pairs(
         F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).cast("int"),
     )
 
-    pairs = pairs0.unionByName(pairs1)
     # one row per pair by construction: path 1 buckets are disjoint groups,
-    # path 3 buckets are distinct fp pairs and fp_pairs is deduped — the
-    # ``dedup`` flag is kept for API stability but costs nothing now
-    del dedup
+    # path 3 buckets are distinct fp pairs and fp_pairs is deduped
+    pairs = pairs0.unionByName(pairs1)
     overflow = (
         ov0.select(F.lit("exact_fp").alias("path"), "bucket_n")
         .unionByName(ovf.select(F.lit("fp_band").alias("path"), "bucket_n"))
@@ -542,7 +521,6 @@ def simhash_conv_pairs(
     cfg: DedupConfig | None = None,
     min_shared_turn_frac: float = 0.8,
     min_matched_turns: int = 2,
-    materialize: bool = True,
     return_overflow: bool = False,
 ):
     """Lift turn pairs to conversation candidate pairs (source='simhash').
@@ -555,13 +533,12 @@ def simhash_conv_pairs(
     connected component (single-turn conversations pair only with other
     single-turn conversations, and only when min_matched_turns allows).
 
-    ``materialize`` checkpoints the turn-pair table; with it off, Spark's
-    exchange reuse still computes the chunk self-join once per action.
+    The turn-pair table is not checkpointed: its one consumer is the
+    coverage aggregation below, and its expensive inputs (``turns_sh``,
+    the fingerprint stats tables) are already materialized.
     """
     cfg = cfg or DedupConfig()
-    tp, overflow = simhash_turn_pairs(turns_sh, cfg, dedup=False)
-    if materialize:
-        tp = tp.localCheckpoint()
+    tp, overflow = simhash_turn_pairs(turns_sh, cfg)
     n_turns = turns_sh.groupBy("conv_id").agg(F.count(F.lit(1)).alias("n_turns"))
     per_pair = tp.groupBy("conv_a", "conv_b").agg(
         F.countDistinct("turn_a").alias("m_a"),

@@ -161,7 +161,6 @@ def doc_anchors(
 def span_candidate_pairs(
     conversations: DataFrame,
     cfg: DedupConfig | None = None,
-    materialize: bool = True,
     input_materialized: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Anchor-join candidates: pairs sharing ≥ min_span_len/(4·mod) anchors.
@@ -170,12 +169,11 @@ def span_candidate_pairs(
     pair table small: a true L-span shares ≈ L/mod anchors, so the threshold
     is conservative by 4× (alignment/normalization slack).
 
-    The anchor table is ALWAYS checkpointed (``materialize`` kept for API
-    stability, ignored): the stats-first pair kernel reads the anchor rows
-    from two subtrees (bucket stats + the s>2 membership join), and without
-    a cut the anchor pandas UDF — the expensive part of this tier — runs
-    once per subtree (measured 58 s fused vs 14.5 s checkpointed at sf0.1
-    local[32]).
+    The anchor table is checkpointed: ``bucketed_pairs`` reads the anchor
+    rows from two subtrees (bucket stats + the s>2 membership join), and
+    without a cut the anchor pandas UDF — the expensive part of this tier —
+    runs once per subtree (measured 58 s vs 14.5 s checkpointed at sf0.1
+    local[32]). ``input_materialized`` is passed on to ``doc_anchors``.
     """
     from dedup.lsh import bucketed_pairs
 
@@ -191,8 +189,6 @@ def span_candidate_pairs(
         ["anchor_hash"],
         ["conv_id"],
         cfg.band_bucket_cap,
-        materialize=False,  # anchors above IS the cut; keyed re-read is free
-        kernel=cfg.pairs_kernel,
     )
     pairs = (
         raw.select(

@@ -578,7 +578,7 @@ def test_bucket_cap_guard(spark):
 
     rows = spark.createDataFrame([(1, "a"), (1, "b")], "k int, m string")
     with pytest.raises(ValueError, match="band_bucket_cap"):
-        bucketed_pairs(rows, ["k"], ["m"], cap=1, materialize=False)
+        bucketed_pairs(rows, ["k"], ["m"], cap=1)
 
 
 def test_cc_width_edge_proportional(spark):
@@ -815,44 +815,38 @@ def test_cc_chain_graph_and_hop_batching(spark):
     unpersist_ids(spark, persistent_rdd_ids(spark) - pre)
 
 
-def test_bucketed_pairs_checkpoint_elision(spark):
-    """r06: bucketed_pairs skips the banded-rows localCheckpoint when the
-    rows are a narrow pass over materialized bytes, and keeps it when the
-    lineage contains Python evaluation (recompute would re-run the UDF)."""
+def test_bucketed_pairs_pins_only_stats_table(spark):
+    """bucketed_pairs has one materialization design: it checkpoints the
+    bucket stats table and never the banded rows, whether the rows are
+    already checkpointed or fed by a Python UDF (such callers checkpoint
+    the UDF output themselves). Both inputs give the same pairs."""
     from pyspark.sql import functions as F
 
     from dedup.lsh import bucketed_pairs
-    from dedup.util import free_all_scratch, narrow_plan, persistent_rdd_ids
+    from dedup.util import free_all_scratch, persistent_rdd_ids
 
     free_all_scratch(spark)
     rows = spark.createDataFrame(
         [(i % 3, f"m{i}") for i in range(30)], "b int, conv_id string"
     ).localCheckpoint()
-    assert narrow_plan(rows.select("b", "conv_id"))
-
-    pre = persistent_rdd_ids(spark)
-    pairs, ov = bucketed_pairs(rows, ["b"], ["conv_id"], cap=100)
-    n_narrow = len(persistent_rdd_ids(spark) - pre)  # stats checkpoint only
 
     @F.pandas_udf("string")
     def ident(s):
         return s
 
     udf_rows = rows.select("b", ident("conv_id").alias("conv_id"))
-    assert not narrow_plan(udf_rows)
-    pre = persistent_rdd_ids(spark)
-    pairs2, ov2 = bucketed_pairs(udf_rows, ["b"], ["conv_id"], cap=100)
-    n_udf = len(persistent_rdd_ids(spark) - pre)  # keyed + stats checkpoints
-    assert n_udf == n_narrow + 1, (n_narrow, n_udf)
-
-    a = {(r["a"]["conv_id"], r["b"]["conv_id"]) for r in pairs.collect()}
-    b = {(r["a"]["conv_id"], r["b"]["conv_id"]) for r in pairs2.collect()}
-    assert a == b and a
+    out = []
+    for src in (rows, udf_rows):
+        pre = persistent_rdd_ids(spark)
+        pairs, _ov = bucketed_pairs(src, ["b"], ["conv_id"], cap=100)
+        assert len(persistent_rdd_ids(spark) - pre) == 1  # the stats table
+        out.append({(r["a"]["conv_id"], r["b"]["conv_id"]) for r in pairs.collect()})
+    assert out[0] == out[1] and out[0]
     free_all_scratch(spark)
 
 
 def test_with_minhash_skips_repartition_on_wide_materialized_input(spark):
-    """r06: repartition=True must not shuffle the full document text when
+    """input_materialized=True must not shuffle the full document text when
     the input is already materialized at >= cluster parallelism; lazy
     inputs keep the unconditional spread."""
     from pyspark.sql import functions as F
@@ -869,7 +863,7 @@ def test_with_minhash_skips_repartition_on_wide_materialized_input(spark):
         .localCheckpoint()
     )
     plan_wide = (
-        with_minhash(conv)
+        with_minhash(conv, input_materialized=True)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -344,10 +344,11 @@ of {best_ratio:.2f}× against a same-moment cpu ceiling of
 {best_ceiling:.2f}×. Best walls: local[{n_hi}] {best32}s, local[{n_lo}] {best8}s.
 
 Why eff_bw is the transferable number — evidence, not assertion:
-- tools/stage_scaling.py decomposes the pipeline per phase at both levels;
-  the phases that fail to reach the cpu ceiling are exactly the
-  DRAM-streaming ones (signature UDFs, Arrow-fed pair tiers), and their
-  observed ratio tracks the measured bus ceiling, not the core count.
+- The recorded per-phase decomposition at both levels (BENCH/BASELINE.md
+  r05) shows that the phases that fail to reach the cpu ceiling are
+  exactly the DRAM-streaming ones (signature UDFs, Arrow-fed pair tiers),
+  and their observed ratio tracks the measured bus ceiling, not the core
+  count.
 - Per-job orchestration latency (stage checkpoints, CC rounds) is constant
   in N and shrinks relative to data-parallel work as corpus size grows
   (compare the sf0.1 1.6M-turn and 6.4M-turn tables across rounds in git
