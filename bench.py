@@ -10,9 +10,12 @@ Runs the headline dedup queries at $SPARK_GRAFT_SF_DIR (default
   driver's documents table;
 - component micro-benches: signatures, LSH pairs, exact tier, ANN top-k.
 
-The synthetic corpus parquet is cached under /tmp keyed by (sf, seed) so
-repeated runs — and the local[8]-vs-local[32] scaling experiment
-(tools/scaling_bench.py) — share byte-identical input.
+The session is sized by ``dedup.session.local_defaults``: cores default to
+the process's CPU affinity, the driver heap to half of MemTotal. The
+synthetic corpus parquet is cached under /dev/shm (else /tmp) keyed by
+(sf, seed) so repeated runs share byte-identical input. Per-layer cost and
+the N-vs-4N scaling gate are measured with perfbench instead (see
+BENCH/BASELINE.md, "Scaling gate on 4 cores").
 """
 
 from __future__ import annotations
@@ -25,8 +28,12 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 SEED = 42
+#: pipeline_synth reps (VERDICT r03 #3): a single rep taken while the
+#: shared-hypervisor host drifts 2x cannot be adjudicated after the fact;
+#: each rep carries a SAME-MOMENT spin sample so the reported best-rep wall
+#: has its own host-speed context in the JSON.
+REPS = 3
 
 
 def sf_of(sf_dir: str) -> float:
@@ -106,7 +113,7 @@ def spin_calibration(procs: int, dur: float = 2.0, mem: bool = False) -> int:
 #: that invalidated two runs measured 9.5-12k on the same code.
 SPIN_1P_ABS_FLOOR = int(os.environ.get("SPARK_GRAFT_SPIN_ABS_FLOOR", "12500"))
 SPIN_REL_FLOOR = float(os.environ.get("SPARK_GRAFT_SPIN_FLOOR_FRAC", "0.8"))
-GATE_MAX_WAIT_SEC = float(os.environ.get("SPARK_GRAFT_GATE_MAX_WAIT", "900"))
+GATE_BUDGET_SEC = 900.0
 GATE_RETRY_SLEEP_SEC = float(os.environ.get("SPARK_GRAFT_GATE_SLEEP", "20"))
 
 #: session-best spins, shared by every gate call in this process
@@ -121,7 +128,7 @@ def host_gate(n_procs: int, budget_sec: float | None = None) -> dict:
     host QUALIFIED — a run that proceeds unqualified is stamped
     ``qualified: false`` so no starved wall can masquerade as a software
     number (VERDICT r04: two rounds of unadjudicable headlines)."""
-    budget = GATE_MAX_WAIT_SEC if budget_sec is None else budget_sec
+    budget = GATE_BUDGET_SEC if budget_sec is None else budget_sec
     t0 = time.monotonic()
     attempts = []
     while True:
@@ -162,11 +169,8 @@ def main() -> None:
 
     sf = sf_of(SF_DIR)
 
-    spark = get_spark(
-        app_name=f"dedup-bench-{CPUS}",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=int(CPUS) if str(CPUS).isdigit() else None,
-    )
+    spark = get_spark(app_name="dedup-bench")
+    cpus = spark.sparkContext.defaultParallelism  # local[cores]
     timings: dict[str, float] = {}
     extras: dict[str, float] = {}
 
@@ -210,24 +214,18 @@ def main() -> None:
 
     turns = spark.read.parquet(corpus_path)
     n_turns = turns.count()
-    # >= 2 reps by default (VERDICT r03 #3): a single rep taken while the
-    # shared-hypervisor host drifts 2x cannot be adjudicated after the
-    # fact; each rep carries a SAME-MOMENT spin sample so the reported
-    # best-rep wall has its own host-speed context in the JSON.
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     # no tier-metric job: the benchmark measures the dedup dataflow, not
     # optional accounting; equal clusters are pinned by
     # tests/test_pipeline.py::test_tier_metrics_off_identical_clusters
-    n_procs = int(CPUS) if str(CPUS).isdigit() else (os.cpu_count() or 8)
     # refuse-starved-hosts gate (VERDICT r04 #1): wait for a qualifying
     # window before the first rep; re-check (short budget) before later reps
-    gates = [host_gate(n_procs)]
+    gates = [host_gate(cpus)]
     extras["spin_iters_before"] = gates[0]["attempts"][-1]["spin_np"]
-    extras["spin_mem_iters_before"] = spin_calibration(n_procs, mem=True)
+    extras["spin_mem_iters_before"] = spin_calibration(cpus, mem=True)
     walls, stage_walls, stage_shuffle, rep_spins = [], [], [], []
-    for rep in range(reps):
+    for rep in range(REPS):
         if rep:
-            gates.append(host_gate(n_procs, budget_sec=GATE_MAX_WAIT_SEC / 3))
+            gates.append(host_gate(cpus, budget_sec=GATE_BUDGET_SEC / 3))
         t0 = time.monotonic()
         result = DedupPipeline(spark, DedupConfig(), tier_metrics=False).run(turns)
         _noop_write(result.clusters)
@@ -240,9 +238,9 @@ def main() -> None:
             {s["stage"]: s.get("shuffle") for s in result.metrics["stages"]}
         )
         free_all_scratch(spark)
-        rep_spins.append(spin_calibration(n_procs))
+        rep_spins.append(spin_calibration(cpus))
     extras["spin_iters_after"] = rep_spins[-1]
-    extras["spin_mem_iters_after"] = spin_calibration(n_procs, mem=True)
+    extras["spin_mem_iters_after"] = spin_calibration(cpus, mem=True)
     best = walls.index(min(walls))
     timings["pipeline_synth"] = round(walls[best], 3)
     extras["synth_turns"] = n_turns
@@ -260,23 +258,6 @@ def main() -> None:
         "qualified": all(g["qualified"] for g in gates),
         "reps": gates,
     }
-
-    if os.environ.get("SPARK_GRAFT_BENCH_ONLY") == "pipeline_synth":
-        print(
-            json.dumps(
-                {
-                    "metric": "dedup_pipeline_total",
-                    "value": timings["pipeline_synth"],
-                    "unit": "sec",
-                    "queries": timings,
-                    "sf": sf,
-                    "cpus": CPUS,
-                    **extras,
-                }
-            )
-        )
-        spark.stop()
-        return
 
     # --- pipeline on driver-testdata-derived transcripts ----------------
     from dedup.driver_tables import derive_transcripts
@@ -326,7 +307,7 @@ def main() -> None:
     timings["ann_topk"] = round(time.monotonic() - t0, 3)
     # same-moment calibration for the micro-benches (VERDICT r02 #8: one
     # clean rep with host-speed context, to separate drift from software)
-    extras["spin_iters_end"] = spin_calibration(n_procs)
+    extras["spin_iters_end"] = spin_calibration(cpus)
 
     total = round(sum(timings.values()), 3)
     print(
@@ -337,7 +318,7 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "sf": sf,
-                "cpus": CPUS,
+                "cpus": str(cpus),
                 **extras,
             }
         )

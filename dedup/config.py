@@ -114,8 +114,6 @@ class DedupConfig:
     seed: int = 42
 
     # ---- execution --------------------------------------------------------
-    #: shuffle partitions; None ⇒ leave session default.
-    shuffle_partitions: int | None = None
     #: max Spark contraction rounds of connected components (graphs above the
     #: driver-collect bound) before raising non-convergence.
     cc_max_iters: int = 25

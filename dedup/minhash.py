@@ -104,27 +104,32 @@ def _pow_series(base: np.uint64, n: int) -> np.ndarray:
     return arr[:n]
 
 
-def _window_hashes_1d(arr_u64: np.ndarray, k: int) -> np.ndarray:
-    """UNMIXED polynomial hashes of every k-element window, O(n).
-
-    Uses the invertible-base prefix trick: with odd base B (invertible mod
-    2^64), prefix sums of a[j]·B^{-j} give every window hash in six
-    vectorized passes — the naive sliding_window_view @ weights matmul runs
-    ~50× slower on the strided view. Values equal poly(window)·B^{-i}
-    (i = window start): a fixed bijection per position that the mix64
-    finalizer absorbs; equal windows at different positions still collide
-    only per the hash, because the B^{-i} factor is cancelled by b_pow.
-    """
+def _prefix_hashes(arr_u64: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(S, B^i) with S the prefix sums of a[j]·B^{-j}: the invertible-base
+    prefix trick (odd B is invertible mod 2^64). ``_prefix_windows`` reads
+    every window of any length from them in vectorized passes — the naive
+    sliding_window_view @ weights matmul runs ~50× slower."""
     n = arr_u64.size
+    with np.errstate(over="ignore"):
+        s = np.zeros(n + 1, dtype=np.uint64)
+        np.cumsum(arr_u64 * _pow_series(_ROLL_BASE_INV, n), out=s[1:])
+    return s, _pow_series(_ROLL_BASE, n)
+
+
+def _prefix_windows(s: np.ndarray, b_pow: np.ndarray, k: int) -> np.ndarray:
+    """UNMIXED hashes (S[i+k]-S[i])·B^i = poly(window)·B^{-(k-1)} of every
+    k-element window: one bijection for all positions, which the mix64
+    finalizer absorbs."""
+    n = b_pow.size
     if n < k:
         return np.empty(0, dtype=np.uint64)
     with np.errstate(over="ignore"):
-        binv_pow = _pow_series(_ROLL_BASE_INV, n)
-        b_pow = _pow_series(_ROLL_BASE, n)
-        c = arr_u64 * binv_pow
-        s = np.zeros(n + 1, dtype=np.uint64)
-        np.cumsum(c, out=s[1:])
         return (s[k:] - s[: n - k + 1]) * b_pow[: n - k + 1]
+
+
+def _window_hashes_1d(arr_u64: np.ndarray, k: int) -> np.ndarray:
+    """UNMIXED polynomial hashes of every k-element window, O(n)."""
+    return _prefix_windows(*_prefix_hashes(arr_u64), k)
 
 
 def shingle_hashes(text: str, k: int) -> np.ndarray:

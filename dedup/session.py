@@ -12,8 +12,22 @@ Scale posture (tested on local[N], designed for 1000-executor clusters):
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
+
+
+def local_defaults(
+    env: Mapping[str, str], affinity_cpus: int, mem_total_kb: int
+) -> tuple[int, int, str]:
+    """(cores, shuffle partitions, driver heap) of a local session: cores are
+    ``SPARK_GRAFT_CPUS``, else the CPU affinity; partitions
+    ``DEDUP_SHUFFLE_PARTITIONS``, else the cores; the heap
+    ``DEDUP_DRIVER_MEM``, else half of MemTotal capped at 48g."""
+    cores = int(env.get("SPARK_GRAFT_CPUS") or affinity_cpus)
+    partitions = int(env.get("DEDUP_SHUFFLE_PARTITIONS") or cores)
+    heap = env.get("DEDUP_DRIVER_MEM") or f"{min(mem_total_kb // 2048, 48 * 1024)}m"
+    return cores, partitions, heap
 
 
 def get_spark(
@@ -24,16 +38,18 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (all cores). On a real
-    cluster this module is a no-op passthrough — spark-submit supplies master
-    and sizing, and these SQL confs remain correct.
+    ``master``, the shuffle partitions and the driver heap default to
+    ``local_defaults`` for this process and host; an explicit argument wins.
+    On a real cluster this module is a no-op passthrough — spark-submit
+    supplies master and sizing, and these SQL confs remain correct.
     """
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    cores, partitions, heap = local_defaults(os.environ, len(os.sched_getaffinity(0)), kb)
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-        master = f"local[{cpus}]"
+        master = f"local[{cores}]"
     if shuffle_partitions is None:
-        n = os.cpu_count() or 8
-        shuffle_partitions = int(os.environ.get("DEDUP_SHUFFLE_PARTITIONS", n))
+        shuffle_partitions = partitions
 
     # glibc tuning for the Python UDF workers (forked from the JVM, which
     # inherits this process's env): without it every Arrow batch's numpy
@@ -71,7 +87,7 @@ def get_spark(
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "2147483647")
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "268435456")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("DEDUP_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         # AppStatusStore retention: util.shuffle_totals sums per-stage byte
         # counters from this store (the bench/kernel-A/B evidence). At the

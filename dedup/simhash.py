@@ -37,16 +37,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dedup.config import DedupConfig
+from dedup.minhash import _LOWER_LUT, batch_window_hashes
 
 
 def _hard_normalize(text: str) -> str:
     import re
 
     return re.sub(r"[^a-z0-9]+", " ", text.lower()).strip()
-
-
-_LOWER_LUT = np.arange(256, dtype=np.uint8)
-_LOWER_LUT[65:91] += 32  # A-Z → a-z
 
 
 def batch_hard_normalize_bytes(texts: list[str | None]) -> list[bytes]:
@@ -120,8 +117,6 @@ def batch_simhash(texts: list[str], k: int = 4) -> np.ndarray:
     MULTISET (frequency-weighted SimHash). Bit order is a fixed bijection
     of feature-hash bits; any fixed permutation preserves Hamming distances
     and chunk banding."""
-    from dedup.minhash import batch_window_hashes
-
     H, starts, counts = batch_window_hashes(batch_hard_normalize_bytes(texts), k)
     n_docs = starts.size
     if n_docs == 0:

@@ -35,47 +35,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dedup.config import DedupConfig
-from dedup.minhash import _ROLL_BASE, _mix64
-
-_B = _ROLL_BASE
-_BINV = np.uint64(pow(int(_B), -1, 1 << 64))
-
-
-def _prefix_arrays(arr_u64: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """S, P arrays such that hash of window [i, i+L) = (S[i+L]-S[i]) * P[i']
-    for a fixed per-L factor; see _window_hashes."""
-    from dedup.minhash import _pow_series
-
-    n = arr_u64.size
-    with np.errstate(over="ignore"):
-        binv_pow = _pow_series(_BINV, n)  # BINV^i (process-cached series)
-        c = arr_u64 * binv_pow
-        s = np.zeros(n + 1, dtype=np.uint64)
-        np.cumsum(c, out=s[1:])  # wraparound cumsum
-        b_pow = _pow_series(_B, n)  # B^i
-    return s, b_pow
-
-
-def _window_hashes(s: np.ndarray, b_pow: np.ndarray, L: int) -> np.ndarray:
-    """Mixed hashes of every L-char window, O(n). hash_i = (S[i+L]-S[i])·B^?:
-    window poly = sum_{j=0..L-1} a[i+j]·B^{L-1-j} = (S[i+L]-S[i])·B^{L-1+i'}
-    with the BINV^i factors cancelled by multiplying back B^i — constant
-    offset per i, absorbed by multiplying (S[i+L]-S[i]) by B^(n-1-i)."""
-    n = b_pow.size
-    if L > n:
-        return np.empty(0, dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        diff = s[L:] - s[: n - L + 1]
-        # multiply by B^i to cancel BINV^i inside diff → alignment-free value
-        h = diff * b_pow[: n - L + 1]
-    return _mix64(h)
+from dedup.minhash import _prefix_hashes, _prefix_windows
 
 
 def longest_common_substring_len(a: str, b: str, lo: int = 1) -> int:
     """Length of the longest common substring of a and b (normalized
     upstream), via binary search + rolling-hash set intersection.
 
-    Hash-based: collision odds per probe ≈ n·m/2^64 — negligible.
+    Hash-based: collision odds per probe ≈ n·m/2^64 — negligible. The
+    window hashes stay unmixed: a probe only asks whether the two sets meet,
+    and the mix64 finalizer is a bijection.
     """
     if isinstance(a, str):
         a = a.encode("utf-8", "surrogatepass")
@@ -85,13 +54,13 @@ def longest_common_substring_len(a: str, b: str, lo: int = 1) -> int:
     xb = np.frombuffer(b, dtype=np.uint8).astype(np.uint64)
     if xa.size == 0 or xb.size == 0:
         return 0
-    sa, pa = _prefix_arrays(xa)
-    sb, pb = _prefix_arrays(xb)
+    sa, pa = _prefix_hashes(xa)
+    sb, pb = _prefix_hashes(xb)
     hi = int(min(xa.size, xb.size))
 
     def common_at(L: int) -> bool:
-        ha = _window_hashes(sa, pa, L)
-        hb = _window_hashes(sb, pb, L)
+        ha = _prefix_windows(sa, pa, L)
+        hb = _prefix_windows(sb, pb, L)
         return np.intersect1d(ha, hb).size > 0
 
     if not common_at(max(lo, 1)):

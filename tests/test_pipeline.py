@@ -103,6 +103,22 @@ def test_tier_metrics_off_identical_clusters(spark, turns_df, pipeline_run):
     assert "tier_metrics_skipped" in quiet.metrics
 
 
+def test_run_pipeline_cli_matches_library(spark, turns_df, pipeline_run, tmp_path):
+    """tools/run_pipeline.py, the production entry point, writes the clusters
+    DedupPipeline.run computes under the same (default) config."""
+    from tools import run_pipeline
+
+    src, out = str(tmp_path / "turns"), str(tmp_path / "clusters")
+    turns_df.write.parquet(src)
+    argv = ["--input", src, "--output", out, "--run-dir", str(tmp_path / "run")]
+    assert run_pipeline.main(argv) == 0
+    written = spark.read.parquet(out)
+    assert written.columns == pipeline_run.clusters.columns
+    assert sorted(map(tuple, written.collect())) == sorted(
+        map(tuple, pipeline_run.clusters.collect())
+    )
+
+
 def test_benchmark_api_still_resolves():
     """The benchmark under perfbench/ is frozen: it constructs DedupPipeline
     with these keywords and patches these (module, name) layer calls. A
