@@ -306,11 +306,11 @@ def q_span_pairs(spark, sf_dir):
     _sp re-wrapped copies. Oracled: LCS(a,b) ≥ L ⟺ a and b share an
     L-char gram, so the DuckDB side self-joins 150-grams of the normalized
     docs; span_len itself is covered by pytest (test_lcs_binary_search)."""
-    from dedup.suffix import span_candidate_pairs, verify_span_pairs
+    from dedup.suffix import doc_anchors, span_candidate_pairs, verify_span_pairs
 
     cfg = DedupConfig(min_span_len=150, span_anchor_mod=16)
     conv = _conversations(spark, sf_dir)
-    cand, _ = span_candidate_pairs(conv, cfg)
+    cand, _ = span_candidate_pairs(doc_anchors(conv, cfg).localCheckpoint(), cfg)
     return verify_span_pairs(cand, conv, cfg).select("conv_a", "conv_b")
 
 

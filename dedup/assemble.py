@@ -87,11 +87,14 @@ def reject_observation(turns: DataFrame, cfg: DedupConfig):
 def assemble_conversations(
     turns: DataFrame, cfg: DedupConfig | None = None, observe_rejects: bool = False
 ):
-    """turns → conversations(conv_id, n_turns, total_chars, first_ts, last_ts, doc).
+    """turns → conversations(conv_id, n_turns, total_chars, first_ts, last_ts,
+    doc, turn_idxs).
 
     The per-turn order invariant: ``doc`` is the turn texts joined by
     TURN_SEP in ascending ``turn_idx`` order regardless of input row order,
-    so re-splitting ``doc`` reproduces the turns exactly (FIXTURES.md §1).
+    so re-splitting ``doc`` reproduces the turns exactly (FIXTURES.md §1);
+    ``turn_idxs`` holds the matching ``turn_idx`` values in the same order,
+    which is all the per-turn fingerprint kernel needs besides ``doc``.
 
     ``total_chars`` counts text characters only (excludes separators), the
     analog of file size (reference: /root/reference/src/fileinfo.rs:21).
@@ -122,14 +125,11 @@ def assemble_conversations(
             F.sum(F.length("text")).cast("long").alias("total_chars"),
             F.min("ts").alias("first_ts"),
             F.max("ts").alias("last_ts"),
-            F.concat_ws(
-                TURN_SEP,
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("turn_idx", "text"))),
-                    lambda s: s.text,
-                ),
-            ).alias("doc"),
+            F.array_sort(F.collect_list(F.struct("turn_idx", "text"))).alias("turns"),
         )
+        .withColumn("doc", F.concat_ws(TURN_SEP, F.col("turns.text")))
+        .withColumn("turn_idxs", F.col("turns.turn_idx"))
+        .drop("turns")
     )
     if cfg.min_size > 1:
         # min-size predicate (reference: src/scanner.rs:103, default 1b

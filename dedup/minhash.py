@@ -7,7 +7,8 @@ MinHash signature has the same one-sided property (identical docs ⇒ identical
 signatures at ANY seed/config) while also catching near-duplicates, which is
 what the north rule requires.
 
-All compute is a single Arrow-batched pandas UDF (no per-row Python):
+All compute is vectorized numpy over Arrow batches, run by the fingerprint
+boundary (``fingerprint.py``; no per-row Python):
 - shingling = numpy sliding-window polynomial rolling hash over UTF-8 bytes
   of the normalized doc, finalized with a 64-bit mixer (N2);
 - signature position i = min over shingles x of mix64(x XOR salt_i), where
@@ -24,13 +25,12 @@ working set per doc regardless of doc length).
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from functools import lru_cache
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from dedup.config import DedupConfig
 
@@ -235,7 +235,9 @@ def _densify_rotation(sig: np.ndarray) -> None:
         row[holes] = row[filled[nxt]]
 
 
-def batch_minhash(texts: list[str], k: int, num_perm: int, seed: int) -> np.ndarray:
+def batch_minhash(
+    texts: list[str | bytes], k: int, num_perm: int, seed: int
+) -> np.ndarray:
     """(n_docs × num_perm) int32 signatures for a batch via ONE-PERMUTATION
     HASHING: mix every window hash once, route it to bin = top log2(num_perm)
     bits, keep the min per (doc, bin) with a single np.minimum.at scatter,
@@ -294,47 +296,29 @@ NORM_PATTERN = "[\\s\\x1c-\\x1f]+"
 def _normalize_expr(col):
     """Spark-side normalization: lowercase + collapse whitespace runs.
 
-    Keeps normalization in JVM codegen so the pandas UDF only does the numpy
-    work; also what makes "whitespace/punct-insensitive near-dup" fixtures
+    Keeps normalization in JVM codegen so the fingerprint UDF only does the
+    numpy work; also what makes "whitespace/punct-insensitive near-dup" fixtures
     land above the Jaccard threshold.
     """
     return F.regexp_replace(F.lower(col), NORM_PATTERN, " ")
-
-
-def make_minhash_udf(cfg: DedupConfig):
-    k, num_perm, seed = cfg.shingle_k, cfg.num_perm, cfg.seed
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def minhash_udf(docs: pd.Series) -> pd.Series:
-        sigs = batch_minhash(
-            [d if d is not None else "" for d in docs], k, num_perm, seed
-        )
-        return pd.Series(list(sigs))
-
-    return minhash_udf
 
 
 def with_minhash(
     conversations: DataFrame,
     cfg: DedupConfig | None = None,
     input_materialized: bool = False,
+    extra_kernels: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Attach a ``minhash: array<int>`` column computed from the normalized doc.
+    """Attach a ``minhash: array<int>`` column computed from the normalized
+    doc through the fingerprint boundary (``fingerprint.with_fingerprints``
+    documents ``input_materialized``). ``extra_kernels`` ("anchors",
+    "turns") ride the same Arrow pass, as in the pipeline's signatures
+    stage; library callers run MinHash alone."""
+    from dedup.fingerprint import with_fingerprints
 
-    Rows are spread across the cluster's full parallelism first: signature
-    cost scales with ROWS, while upstream AQE coalesces shuffle output by
-    BYTES — without this, a text corpus that fits in a couple of 64 MB
-    partitions runs the UDF on a couple of cores. ``input_materialized``
-    (checkpointed or parquet-backed input) reads the real partition count
-    and skips the full-text shuffle when the input is already wide enough;
-    see ``util.spread_for_udf``.
-    """
-    from dedup.util import spread_for_udf
-
-    cfg = cfg or DedupConfig()
-    udf = make_minhash_udf(cfg)
-    conversations = spread_for_udf(conversations, materialized=input_materialized)
-    return conversations.withColumn("minhash", udf(_normalize_expr(F.col("doc"))))
+    return with_fingerprints(
+        conversations, cfg, ("minhash", *extra_kernels), input_materialized
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -354,18 +338,20 @@ _LOWER_LUT = np.arange(256, dtype=np.uint8)
 _LOWER_LUT[65:91] += 32  # A-Z → a-z
 
 
-def batch_ws_normalize_bytes(
-    texts: list[str | None], cap: int | None = None
+def ascii_normalize_bytes(
+    texts: list[str | None],
+    slow: Callable[[str], str],
+    keep_fn: Callable[[np.ndarray, np.ndarray, np.ndarray], np.ndarray],
+    cap: int | None = None,
 ) -> list[bytes]:
-    """UTF-8 bytes of ``py_normalize(t)[:cap]`` for every text, vectorized.
+    """UTF-8 bytes of ``slow(t)[:cap]`` for every text, vectorized for ASCII.
 
-    ASCII texts (the overwhelming majority) take ONE numpy pass over the
-    concatenated byte buffer: lowercase via LUT, every whitespace run —
-    including leading/trailing runs; py_normalize does not strip — collapses
-    to a single space. Non-ASCII texts fall back to the per-doc regex.
-    Bit-identity with the regex is pinned by test. The per-doc ``re.sub``
-    loop this replaces was ~0.15 s per 5 MB of docs in the span-anchor and
-    fingerprint UDFs.
+    Non-ASCII texts take the per-doc ``slow`` (a regex). ASCII texts (the
+    overwhelming majority) take ONE numpy pass over the concatenated byte
+    buffer: ``low`` is that buffer lowercased via LUT, and
+    ``keep_fn(low, offs, lens)`` returns the mask of bytes to keep, setting
+    kept separator bytes of ``low`` to a space in place. Per-doc ``re.sub``
+    loops cost ~0.15 s per 5 MB of docs in the fingerprint UDF.
     """
     n = len(texts)
     out: list[bytes | None] = [None] * n
@@ -377,10 +363,7 @@ def batch_ws_normalize_bytes(
             ascii_idx.append(i)
             bufs.append(t.encode("ascii"))
         else:
-            s = py_normalize(t)
-            if cap is not None:
-                s = s[:cap]
-            out[i] = s.encode("utf-8", "surrogatepass")
+            out[i] = slow(t)[:cap].encode("utf-8", "surrogatepass")
     if not bufs:
         return out
     lens = np.fromiter((len(b) for b in bufs), dtype=np.int64, count=len(bufs))
@@ -391,16 +374,8 @@ def batch_ws_normalize_bytes(
     buf = np.frombuffer(b"".join(bufs), dtype=np.uint8)
     offs = np.zeros(lens.size, dtype=np.int64)
     np.cumsum(lens[:-1], out=offs[1:])
-    low = _LOWER_LUT[buf]
-    ws = _WS_BYTES[buf]
-    # keep all non-whitespace, plus the HEAD of every whitespace run (the
-    # previous char in the SAME doc is non-whitespace or absent)
-    prev_ws = np.empty_like(ws)
-    prev_ws[0] = False
-    prev_ws[1:] = ws[:-1]
-    prev_ws[offs[offs < buf.size]] = False  # empty trailing docs: offs == size
-    keep = (~ws) | (~prev_ws)
-    low[ws] = 32  # in place: low is this function's own temporary
+    low = _LOWER_LUT[buf]  # this function's own temporary: keep_fn edits it
+    keep = keep_fn(low, offs, lens)
     raw = low[keep].tobytes()
     kc = np.cumsum(keep, dtype=np.int64)
     ends = offs + lens
@@ -408,10 +383,31 @@ def batch_ws_normalize_bytes(
     prev = 0
     for j, i in enumerate(ascii_idx):
         e = int(kept_end[j])
-        b = raw[prev:e]
-        out[i] = b[:cap] if cap is not None else b
+        out[i] = raw[prev:e][:cap]
         prev = e
     return out
+
+
+def _ws_keep(low: np.ndarray, offs: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    # keep all non-whitespace, plus the HEAD of every whitespace run (the
+    # previous char in the SAME doc is non-whitespace or absent)
+    ws = _WS_BYTES[low]
+    prev_ws = np.empty_like(ws)
+    prev_ws[0] = False
+    prev_ws[1:] = ws[:-1]
+    prev_ws[offs[offs < low.size]] = False  # empty trailing docs: offs == size
+    low[ws] = 32
+    return (~ws) | (~prev_ws)
+
+
+def batch_ws_normalize_bytes(
+    texts: list[str | None], cap: int | None = None
+) -> list[bytes]:
+    """UTF-8 bytes of ``py_normalize(t)[:cap]`` for every text: lowercase,
+    every whitespace run — including leading/trailing runs; py_normalize
+    does not strip — collapses to a single space. Bit-identity with the
+    regex is pinned by test."""
+    return ascii_normalize_bytes(texts, py_normalize, _ws_keep, cap)
 
 
 def py_minhash(text: str, cfg: DedupConfig) -> np.ndarray:

@@ -2,11 +2,15 @@
 
 Generalizes the reference's per-record ``FileState::SwProcessed`` marker
 (reference: /root/reference/src/fileinfo.rs:12-16) into per-STAGE idempotent
-table writes: each stage materializes to ``<run_dir>/<stage>`` (Iceberg in
-production, parquet here — same read/write API via io helpers), records a
-lineage row, and a re-run loads any stage whose _SUCCESS marker exists
-instead of recomputing it. Killing the job after stage k and re-running
-yields byte-identical clusters (resume test).
+table writes: each stage is written as parquet to ``<run_dir>/<stage>`` by
+``_materialize`` and read back, records a lineage row, and a re-run loads
+any stage whose _SUCCESS marker exists instead of recomputing it. Killing
+the job after stage k and re-running yields byte-identical clusters (resume
+test).
+
+The raw turns are read once, by assembly. The ``signatures`` stage holds
+the output of the one fingerprint pass (``fingerprint.py``), and the LSH,
+SimHash and span tiers all read it.
 
 Metrics are first-class (north rule): every stage logs row counts; the LSH
 and anchor overflow paths log how many mega-buckets were demoted to star
@@ -27,11 +31,13 @@ from dedup.assemble import assemble_conversations
 from dedup.cc import _LOCAL_EDGES, connected_components
 from dedup.config import DedupConfig
 from dedup.exact import exact_pairs
+from dedup.fingerprint import KERNELS
 from dedup.keep import select_representatives
 from dedup.lsh import candidate_pairs
 from dedup.minhash import with_minhash
 from dedup.simhash import simhash_conv_pairs, with_turn_simhash
 from dedup.suffix import span_candidate_pairs, verify_span_pairs
+from dedup.util import persistent_rdd_ids, shuffle_delta, shuffle_totals, unpersist_ids
 from dedup.verify import verify_pairs
 
 
@@ -79,18 +85,17 @@ class DedupPipeline:
         ``tier_metrics=False`` skips the one job that counts the tiers'
         overflow rows and records the skip in ``metrics``.
 
-        ``concurrent=True`` (default) builds the independent fingerprint
-        tiers in parallel driver threads: the signature UDF + LSH stats,
-        the SimHash UDF + its pair kernel, and the span anchor UDF share no
-        inputs beyond the conversations stage, so their eager jobs are
-        submitted to the Spark scheduler concurrently. Serializing them
-        (concurrent=False — same DataFrames, same results, sequential
+        ``concurrent=True`` (default) builds the independent candidate
+        tiers in parallel driver threads: the LSH, SimHash and span pair
+        kernels share no inputs beyond the signatures stage, so their eager
+        jobs are submitted to the Spark scheduler concurrently. Serializing
+        them (concurrent=False — same DataFrames, same results, sequential
         submission) leaves most task slots idle during every narrow stage
-        (stats aggregations, checkpoints, Arrow batch boundaries) — idle
-        slots cost nothing on a small cluster but scale linearly with
-        cluster width, which is precisely the N→4N scaling-efficiency
-        failure mode. Stage walls still sum to the run wall; attribution
-        follows stage completion order."""
+        (stats aggregations, checkpoints) — idle slots cost nothing on a
+        small cluster but scale linearly with cluster width, which is
+        precisely the N→4N scaling-efficiency failure mode. Stage walls
+        still sum to the run wall; attribution follows stage completion
+        order."""
         self.spark = spark
         self.cfg = cfg or DedupConfig()
         self.run_dir = run_dir
@@ -122,7 +127,7 @@ class DedupPipeline:
 
         Recorded seconds are the full SECTION wall — elapsed since the
         previous stage finished, not just this write — so eager work done
-        while the stage's DataFrame is constructed (tier stats/UDF-table
+        while the stage's DataFrame is constructed (tier bucket-stats
         localCheckpoints) is attributed to the stage that triggered it and
         per-stage walls sum to the run wall.
         """
@@ -146,8 +151,6 @@ class DedupPipeline:
         return out
 
     def _record(self, stage: str, rows: int, seconds: float, resumed: bool):
-        from dedup.util import shuffle_delta, shuffle_totals
-
         self._section_t0 = time.monotonic()  # next stage's section starts now
         entry = {
             "stage": stage,
@@ -177,13 +180,9 @@ class DedupPipeline:
     # ---- stages ---------------------------------------------------------
 
     def run(self, turns: DataFrame) -> PipelineResult:
-        from dedup.util import persistent_rdd_ids, unpersist_ids
-
         cfg = self.cfg
         metrics: dict = {}
         self._section_t0 = time.monotonic()
-        from dedup.util import shuffle_totals
-
         self._shuffle_snap = shuffle_totals(self.spark)
         _pre_ids = persistent_rdd_ids(self.spark)
 
@@ -199,84 +198,56 @@ class DedupPipeline:
             metrics["ingest_rejects"] = rej_obs.get
             self.log(f"ingest rejects: {metrics['ingest_rejects']}")
 
-        # Tier construction: the signature UDF (+LSH stats), the SimHash
-        # UDF (+pair kernel) and the span anchor UDF are independent given
-        # the conversations stage. ``concurrent`` submits their EAGER jobs
-        # (stage writes, stats/UDF-table checkpoints) from parallel driver
-        # threads so the Spark scheduler backfills idle task slots — the
-        # narrow phases of one tier overlap the wide phases of another.
-        # Resume guards unchanged: a tier's kernels are never even
-        # constructed when the stage consuming them is already on disk.
+        # One fingerprint pass: the signatures stage holds every kernel's
+        # output (MinHash, span anchors, per-turn SimHash) whatever tiers
+        # are enabled, so a resumed run can enable any of them. After it,
+        # the tiers read only the conversations and signatures stages.
+        sigs = self._materialize(
+            "signatures",
+            with_minhash(
+                conv, cfg, input_materialized=True, extra_kernels=("anchors", "turns")
+            ).select("conv_id", *KERNELS),
+        )
+
+        # Tier construction: LSH, SimHash and span candidates are
+        # independent given the signatures stage. ``concurrent`` submits
+        # their EAGER jobs (bucket-stats checkpoints) from parallel driver
+        # threads so the Spark scheduler backfills idle task slots. Resume
+        # guards: a tier is never even constructed when the stage consuming
+        # it is already on disk.
         pairs_done = self._done("pairs")
         edges_done = self._done("edges")
         span_needed = self.enable_span and not edges_done
         overflow_dfs: dict[str, DataFrame] = {}
         tier: dict[str, DataFrame] = {}
 
-        def t_signatures():
-            sigs = self._materialize(
-                "signatures",
-                with_minhash(conv, cfg, input_materialized=True).select(
-                    "conv_id", "minhash"
-                ),
+        def t_lsh():
+            # dedup=False: the strongest-source groupBy below is the single
+            # pair-dedup shuffle for every tier — a per-tier dropDuplicates
+            # would shuffle the same pair set twice
+            tier["lsh"], overflow_dfs["lsh_overflow_buckets"] = candidate_pairs(
+                sigs, cfg, dedup=False
             )
-            tier["sigs"] = sigs
-            if not pairs_done:
-                # dedup=False: the strongest-source groupBy below is the
-                # single pair-dedup shuffle for every tier — a per-tier
-                # dropDuplicates would shuffle the same pair set twice
-                lsh_pairs, lsh_overflow = candidate_pairs(sigs, cfg, dedup=False)
-                tier["lsh"] = lsh_pairs
-                overflow_dfs["lsh_overflow_buckets"] = lsh_overflow
 
         def t_simhash():
-            from dedup.assemble import turn_filters
-
-            turns_f = turns
-            pred = turn_filters(cfg)
-            if pred is not None:
-                turns_f = turns_f.where(pred)
-            # all tiers must see the same filtered population: conversations
-            # dropped by min_size (applied in assemble_conversations) must
-            # not re-enter through simhash turn edges — semi-join against
-            # the assembled (already materialized) conversations table.
-            # (no broadcast hint: the conv_id set is corpus-sized at scale;
-            # AQE picks broadcast itself when it is actually small)
-            turns_f = turns_f.join(conv.select("conv_id"), "conv_id", "left_semi")
-            # No repartition before the UDF: this input is scan-fed
-            # (session maxPartitionBytes=16MB guarantees ≥ corpus_bytes/16MB
-            # splits — already ≥ parallelism for any corpus where the UDF
-            # cost matters), and an unconditional repartition would shuffle
-            # the FULL raw text payload (measured: 1.3 GB moved for nothing
-            # at 6.4M turns; walls equal at same-moment host speed).
-            # materialize the per-turn simhash table: the pair kernel reads
-            # it from two subtrees (the fingerprint stats + the expansion
-            # join), and without a checkpoint the simhash UDF — the most
-            # expensive kernel in the stage — would run once per subtree
-            sh = (
-                with_turn_simhash(turns_f, cfg)
-                .select("conv_id", "turn_idx", "simhash")
-                .localCheckpoint()
+            tier["simhash"], overflow_dfs["simhash_overflow_buckets"] = (
+                simhash_conv_pairs(with_turn_simhash(sigs), cfg, return_overflow=True)
             )
-            sh_pairs, sh_overflow = simhash_conv_pairs(
-                sh, cfg, return_overflow=True
-            )
-            tier["simhash"] = sh_pairs
-            overflow_dfs["simhash_overflow_buckets"] = sh_overflow
 
         def t_span():
             # Span candidates are anchor joins only — the LCS verifier runs
             # later, anti-joined against the already-accepted edge set, so
             # building candidates early costs nothing extra
-            span_cand, span_overflow = span_candidate_pairs(
-                conv, cfg, input_materialized=True
+            anchors = sigs.select("conv_id", F.explode("anchors").alias("anchor_hash"))
+            tier["span_cand"], overflow_dfs["span_overflow_anchors"] = (
+                span_candidate_pairs(anchors, cfg)
             )
-            tier["span_cand"] = span_cand
-            overflow_dfs["span_overflow_anchors"] = span_overflow
 
-        tasks = [t_signatures]
-        if not pairs_done and self.enable_simhash:
-            tasks.append(t_simhash)
+        tasks = []
+        if not pairs_done:
+            tasks.append(t_lsh)
+            if self.enable_simhash:
+                tasks.append(t_simhash)
         if span_needed:
             tasks.append(t_span)
         if self.concurrent and len(tasks) > 1:
@@ -288,7 +259,6 @@ class DedupPipeline:
         else:
             for t in tasks:
                 t()
-        sigs = tier["sigs"]
 
         all_pairs = None
         if not pairs_done:
@@ -348,8 +318,6 @@ class DedupPipeline:
         )
 
     def _finish(self, edges, conv, metrics, overflow_dfs, _pre_ids):
-        from dedup.util import persistent_rdd_ids, unpersist_ids
-
         cfg = self.cfg
         # Overflow metrics (no silent caps — the north rule): all tier
         # overflow counts are batched into ONE tiny union-agg job instead of
@@ -396,8 +364,8 @@ class DedupPipeline:
                     cc.withColumnRenamed("conv_id", "conv_id"), conv, self.keep_policy
                 ),
             )
-            # free every scratch checkpoint this run pinned (tier sized
-            # tables, simhash/turn-pair tables, CC rounds, conv/sigs/...)
+            # free every scratch checkpoint this run pinned (bucket stats
+            # tables, CC rounds, conv/sigs/...)
             # EXCEPT the blocks backing the returned clusters DataFrame —
             # leaked blocks measurably slow the session's next job.
             _cluster_ids = persistent_rdd_ids(self.spark) - _before_clusters

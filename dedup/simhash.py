@@ -7,11 +7,12 @@ the reference's per-file prefix hash (reference: /root/reference/src/
 fileinfo.rs:42-48): a cheap fixed-width fingerprint whose equality implies
 near-equality of content.
 
-Dataflow (everything but the signature UDF is JVM-side):
+Dataflow (everything but the fingerprint kernel is JVM-side):
 1. normalize turn text hard (lowercase, strip punctuation) — so pure
    whitespace/punct variants hash IDENTICALLY;
-2. 64-bit SimHash per turn in one Arrow-batched pandas UDF (numpy bit-count
-   over shingle hashes);
+2. 64-bit SimHash per non-empty turn (numpy bit-count over shingle
+   hashes), computed by the fingerprint boundary from the assembled doc
+   (``fingerprint.py``) — the tier never re-reads the raw turns;
 3. pigeonhole banding (Manku-style): the 64 bits split into
    ``simhash_blocks`` blocks; Hamming ≤ k ⇒ at least (blocks-k) blocks
    match exactly, so every (blocks-k)-subset of blocks becomes a band key
@@ -31,13 +32,11 @@ Dataflow (everything but the signature UDF is JVM-side):
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from dedup.config import DedupConfig
-from dedup.minhash import _LOWER_LUT, batch_window_hashes
+from dedup.minhash import ascii_normalize_bytes, batch_window_hashes
 
 
 def _hard_normalize(text: str) -> str:
@@ -46,63 +45,29 @@ def _hard_normalize(text: str) -> str:
     return re.sub(r"[^a-z0-9]+", " ", text.lower()).strip()
 
 
-def batch_hard_normalize_bytes(texts: list[str | None]) -> list[bytes]:
-    """UTF-8 bytes of ``_hard_normalize(t)`` for every text, vectorized.
-
-    ASCII texts (the overwhelming majority of any tokenised corpus) take ONE
-    numpy pass over the concatenated byte buffer: lowercase via LUT, runs of
-    non-[a-z0-9] collapse to a single space, leading/trailing runs dropped
-    (the regex + strip semantics, bit-identical — pinned by test). Non-ASCII
-    texts fall back to the per-doc regex. The per-doc ``re.sub`` loop this
-    replaces was 29% of the simhash UDF kernel (measured 0.21 s vs 0.02 s
-    per 20k turns).
-    """
-    n = len(texts)
-    out: list[bytes | None] = [None] * n
-    ascii_idx: list[int] = []
-    bufs: list[bytes] = []
-    for i, t in enumerate(texts):
-        t = t or ""
-        if t.isascii():
-            ascii_idx.append(i)
-            bufs.append(t.encode("ascii"))
-        else:
-            out[i] = _hard_normalize(t).encode("utf-8", "surrogatepass")
-    if not bufs:
-        return out
-    lens = np.fromiter((len(b) for b in bufs), dtype=np.int64, count=len(bufs))
-    if int(lens.sum()) == 0:
-        for i in ascii_idx:
-            out[i] = b""
-        return out
-    buf = np.frombuffer(b"".join(bufs), dtype=np.uint8)
-    offs = np.zeros(lens.size, dtype=np.int64)
-    np.cumsum(lens[:-1], out=offs[1:])
-
-    low = _LOWER_LUT[buf]
+def _hard_keep(low: np.ndarray, offs: np.ndarray, lens: np.ndarray) -> np.ndarray:
     is_al = ((low >= 97) & (low <= 122)) | ((low >= 48) & (low <= 57))
     # a space survives only at a run head (previous char in the SAME doc is
     # alnum) with an alnum still ahead in the doc (strip of trailing runs)
     prev_al = np.empty_like(is_al)
     prev_al[0] = False
     prev_al[1:] = is_al[:-1]
-    prev_al[offs[offs < buf.size]] = False  # empty trailing docs: offs == size
+    prev_al[offs[offs < low.size]] = False  # empty trailing docs: offs == size
     c = np.cumsum(is_al, dtype=np.int64)  # alnum count through position i
     ends = offs + lens  # exclusive doc ends
     doc_idx = np.repeat(np.arange(lens.size), lens)
-    tot_by_doc = c[np.maximum(ends - 1, 0)]
-    after = tot_by_doc[doc_idx] - c > 0
-    keep = is_al | ((~is_al) & prev_al & after)
-    low[~is_al] = 32  # in place: low is this function's own temporary
-    raw = low[keep].tobytes()
-    kc = np.cumsum(keep, dtype=np.int64)
-    kept_end = np.where(ends > 0, kc[np.maximum(ends - 1, 0)], 0)
-    prev = 0
-    for j, i in enumerate(ascii_idx):
-        e = int(kept_end[j])
-        out[i] = raw[prev:e]
-        prev = e
-    return out
+    after = c[np.maximum(ends - 1, 0)][doc_idx] - c > 0
+    low[~is_al] = 32
+    return is_al | ((~is_al) & prev_al & after)
+
+
+def batch_hard_normalize_bytes(texts: list[str | None]) -> list[bytes]:
+    """UTF-8 bytes of ``_hard_normalize(t)`` for every text: lowercase, runs
+    of non-[a-z0-9] collapse to a single space, leading/trailing runs
+    dropped (the regex + strip semantics, bit-identical — pinned by test).
+    The per-doc ``re.sub`` loop this replaces was 29% of the simhash kernel
+    (measured 0.21 s vs 0.02 s per 20k turns)."""
+    return ascii_normalize_bytes(texts, _hard_normalize, _hard_keep)
 
 
 def batch_simhash(texts: list[str], k: int = 4) -> np.ndarray:
@@ -166,25 +131,12 @@ def py_simhash(text: str, k: int = 4, seed: int = 42) -> int:
     return int(batch_simhash([text], k)[0])
 
 
-def make_simhash_udf(cfg: DedupConfig):
-    k = 4
-
-    @F.pandas_udf(T.LongType())
-    def simhash_udf(texts: pd.Series) -> pd.Series:
-        return pd.Series(batch_simhash(list(texts), k))
-
-    return simhash_udf
-
-
-def with_turn_simhash(turns: DataFrame, cfg: DedupConfig | None = None) -> DataFrame:
-    """Per-turn simhash for NON-EMPTY turns. Empty turns are dropped here,
-    before the UDF (an empty-text simhash would mega-bucket, and filtering
-    first keeps the checkpointed table free of the text column)."""
-    cfg = cfg or DedupConfig()
-    udf = make_simhash_udf(cfg)
-    return turns.where(F.length(F.coalesce("text", F.lit(""))) > 0).withColumn(
-        "simhash", udf(F.col("text"))
-    )
+def with_turn_simhash(signatures: DataFrame) -> DataFrame:
+    """(conv_id, turns) → (conv_id, turn_idx, simhash), one row per
+    non-empty turn: the explode of the per-turn list the fingerprint
+    boundary computes (``fingerprint.with_fingerprints``). Empty turns have
+    no entry there (an empty-text simhash would mega-bucket)."""
+    return signatures.select("conv_id", F.inline("turns"))
 
 
 def with_turn_simhash_md5(
@@ -412,9 +364,10 @@ def simhash_turn_pairs(
     Star edges still face the exact cross-conv/hamming filters; a capped
     member's pairs beyond its anchor flow through connected components.
 
-    ``turns_sh`` should be materialized: the fingerprint aggregation and
-    the expansion join both read it, so a SimHash UDF in its lineage would
-    run twice (the pipeline checkpoints the per-turn table).
+    ``turns_sh`` should be materialized or a narrow pass over a
+    materialized table: the fingerprint aggregation and the expansion join
+    both read it, so a SimHash UDF in its lineage would run twice (the
+    pipeline passes the explode of its ``signatures`` stage).
     """
     from dedup.lsh import bucketed_pairs, route_bucket_pairs
 
@@ -529,8 +482,8 @@ def simhash_conv_pairs(
     single-turn conversations, and only when min_matched_turns allows).
 
     The turn-pair table is not checkpointed: its one consumer is the
-    coverage aggregation below, and its expensive inputs (``turns_sh``,
-    the fingerprint stats tables) are already materialized.
+    coverage aggregation below, and its expensive inputs (the stage under
+    ``turns_sh``, the fingerprint stats tables) are already materialized.
     """
     cfg = cfg or DedupConfig()
     tp, overflow = simhash_turn_pairs(turns_sh, cfg)

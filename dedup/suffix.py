@@ -75,80 +75,66 @@ def longest_common_substring_len(a: str, b: str, lo: int = 1) -> int:
     return best
 
 
-def doc_anchors(
-    conversations: DataFrame,
-    cfg: DedupConfig | None = None,
-    input_materialized: bool = False,
-) -> DataFrame:
-    """(conv_id, doc) → (conv_id, anchor_hash), one row per distinct anchor.
+def batch_anchors(
+    docs: list[str | None], cap: int, mod: int, w: int = 64
+) -> tuple[np.ndarray, np.ndarray]:
+    """Distinct span anchors of every doc in ONE vectorized pass: the mixed
+    hashes of the ``w``-byte windows of ``py_normalize(doc)[:cap]`` that are
+    ≡ 0 mod ``mod``, ascending per doc. Docs shorter than ``w`` emit none.
 
-    Anchors are ``anchor_w``-char windows with mixed hash ≡ 0 mod
-    span_anchor_mod, computed in a pandas UDF over the normalized doc.
+    Returns (counts, hashes): doc i's anchors are the next counts[i] values
+    of ``hashes`` (int64).
     """
-    from dedup.util import spread_for_udf
+    from dedup.minhash import batch_window_hashes, batch_ws_normalize_bytes
 
-    cfg = cfg or DedupConfig()
-    w, mod, cap = 64, cfg.span_anchor_mod, cfg.span_doc_cap
-    # spread rows for the UDF; a checkpointed input that is already wide
-    # skips the full-doc-text shuffle (see util.spread_for_udf)
-    conversations = spread_for_udf(conversations, materialized=input_materialized)
+    normed = batch_ws_normalize_bytes(docs, cap)
+    n = len(normed)
+    if n == 0:
+        return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)
+    H, _starts, counts = batch_window_hashes(normed, w)
+    lens = np.fromiter((len(b) for b in normed), dtype=np.int64, count=n)
+    doc_idx = np.repeat(np.arange(n, dtype=np.int64), counts)
+    # a doc shorter than the window has one whole-text hash in H, which
+    # must not leak through as an anchor
+    m = np.repeat(lens >= w, counts) & (H % np.uint64(mod) == 0)
+    d_sel, h_sel = doc_idx[m], H[m].astype(np.int64)
+    order = np.lexsort((h_sel, d_sel))
+    d_s, h_s = d_sel[order], h_sel[order]
+    keep = np.ones(d_s.size, dtype=bool)
+    keep[1:] = (d_s[1:] != d_s[:-1]) | (h_s[1:] != h_s[:-1])
+    return np.bincount(d_s[keep], minlength=n), h_s[keep]
 
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def anchors_udf(docs: pd.Series) -> pd.Series:
-        # ONE vectorized pass for the whole batch (was a per-doc loop of
-        # ~10 small numpy calls — fixed overhead dominated at ~2 KB/doc).
-        # batch_window_hashes window values are position-independent and
-        # use the same base + mix64 as the per-doc _window_hashes, so the
-        # emitted anchor hashes are bit-identical to the loop's. The
-        # normalize pass is vectorized too (regex-parity pinned by test).
-        from dedup.minhash import batch_window_hashes, batch_ws_normalize_bytes
 
-        normed = batch_ws_normalize_bytes(list(docs), cap)
-        n = len(normed)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        H, _starts, counts = batch_window_hashes(normed, w)
-        lens = np.fromiter((len(b) for b in normed), dtype=np.int64, count=n)
-        doc_idx = np.repeat(np.arange(n, dtype=np.int64), counts)
-        # docs shorter than the window emit no anchors (their single
-        # whole-text hash from batch_window_hashes must not leak through)
-        m = np.repeat(lens >= w, counts) & (H % np.uint64(mod) == 0)
-        d_sel, h_sel = doc_idx[m], H[m].astype(np.int64)
-        order = np.lexsort((h_sel, d_sel))
-        d_s, h_s = d_sel[order], h_sel[order]
-        keep = np.ones(d_s.size, dtype=bool)
-        keep[1:] = (d_s[1:] != d_s[:-1]) | (h_s[1:] != h_s[:-1])
-        d_s, h_s = d_s[keep], h_s[keep]
-        bounds = np.searchsorted(d_s, np.arange(n + 1))
-        return pd.Series([h_s[bounds[i] : bounds[i + 1]] for i in range(n)])
+def doc_anchors(conversations: DataFrame, cfg: DedupConfig | None = None) -> DataFrame:
+    """(conv_id, doc) → (conv_id, anchor_hash), one row per distinct anchor,
+    through the fingerprint boundary with only the anchor kernel."""
+    from dedup.fingerprint import with_fingerprints
 
-    return conversations.select(
-        "conv_id", F.explode(anchors_udf(F.col("doc"))).alias("anchor_hash")
+    return with_fingerprints(conversations, cfg, ("anchors",)).select(
+        "conv_id", F.explode("anchors").alias("anchor_hash")
     )
 
 
 def span_candidate_pairs(
-    conversations: DataFrame,
-    cfg: DedupConfig | None = None,
-    input_materialized: bool = False,
+    anchors: DataFrame, cfg: DedupConfig | None = None
 ) -> tuple[DataFrame, DataFrame]:
-    """Anchor-join candidates: pairs sharing ≥ min_span_len/(4·mod) anchors.
+    """(conv_id, anchor_hash) → anchor-join candidates: pairs sharing
+    ≥ min_span_len/(4·mod) anchors.
 
     Returns (pairs, overflow_metrics). The shared-anchor minimum keeps the
     pair table small: a true L-span shares ≈ L/mod anchors, so the threshold
     is conservative by 4× (alignment/normalization slack).
 
-    The anchor table is checkpointed: ``bucketed_pairs`` reads the anchor
-    rows from two subtrees (bucket stats + the s>2 membership join), and
-    without a cut the anchor pandas UDF — the expensive part of this tier —
-    runs once per subtree (measured 58 s vs 14.5 s checkpointed at sf0.1
-    local[32]). ``input_materialized`` is passed on to ``doc_anchors``.
+    ``bucketed_pairs`` reads the anchor rows from two subtrees (bucket stats
+    + the s>2 membership join), so ``anchors`` must be materialized or a
+    narrow pass over a materialized table — the pipeline passes the explode
+    of its ``signatures`` stage; a ``doc_anchors`` caller checkpoints it, or
+    the anchor UDF runs once per subtree.
     """
     from dedup.lsh import bucketed_pairs
 
     cfg = cfg or DedupConfig()
     min_shared = max(2, cfg.min_span_len // (4 * cfg.span_anchor_mod))
-    anchors = doc_anchors(conversations, cfg, input_materialized).localCheckpoint()
 
     # bucket pairing (see lsh.bucketed_pairs); hot anchors (boilerplate)
     # emit star edges + overflow rows instead of O(n²) pairs — a star edge

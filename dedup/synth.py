@@ -177,15 +177,3 @@ def corpus_to_spark(spark, corpus: Corpus):
 
     return spark.createDataFrame(corpus.turns, schema=TRANSCRIPTS_SCHEMA)
 
-
-def write_corpus(path: str, n_convs: int, seed: int = 42, **kw) -> pd.DataFrame:
-    """Materialize a corpus to parquet (bench input); returns truth pairs."""
-    corpus = make_corpus(n_convs=n_convs, seed=seed, **kw)
-    # Spark cannot read TIMESTAMP(NANOS) parquet — write microseconds.
-    # Small row groups keep the single file SPLITTABLE: Spark parallelizes
-    # a scan at row-group granularity, and one giant row group would pin
-    # the whole map side to one task.
-    turns = corpus.turns.assign(ts=corpus.turns["ts"].astype("datetime64[us]"))
-    turns.to_parquet(f"{path}/transcripts.parquet", index=False, row_group_size=50_000)
-    corpus.truth_pairs.to_parquet(f"{path}/truth_pairs.parquet", index=False)
-    return corpus.truth_pairs

@@ -84,7 +84,7 @@ def shuffle_delta(
 
 
 def spread_for_udf(df, materialized: bool = True):
-    """Ensure a pandas-UDF input has ≥ cluster-parallelism partitions —
+    """Ensure a Python-UDF input has ≥ cluster-parallelism partitions —
     WITHOUT a blanket repartition. UDF cost scales with ROWS, and upstream
     AQE coalesces by BYTES, so a squeezed input serializes the UDF; but an
     unconditional ``repartition`` shuffles the full text payload even when

@@ -62,7 +62,12 @@ def verify_pairs(
     if cfg.exact_verify:
         if conversations is None:
             raise ValueError("exact_verify requires the conversations DataFrame")
-        docs = conversations.select("conv_id", "doc")
+        from dedup.minhash import _normalize_expr
+
+        # the signature tier's normalization, applied in the JVM: the UDF
+        # shingles exactly the text MinHash signs, so exact-verify Jaccard
+        # is the quantity the signatures estimate
+        docs = conversations.select("conv_id", _normalize_expr(F.col("doc")).alias("doc"))
         joined = (
             cand.join(docs.withColumnsRenamed({"conv_id": "conv_a", "doc": "doc_a"}), "conv_a")
             .join(docs.withColumnsRenamed({"conv_id": "conv_b", "doc": "doc_b"}), "conv_b")
@@ -73,15 +78,12 @@ def verify_pairs(
 
         @F.pandas_udf(T.DoubleType())
         def jac(doc_a: pd.Series, doc_b: pd.Series) -> pd.Series:
-            from dedup.minhash import py_normalize, shingle_hashes
+            from dedup.minhash import shingle_hashes
 
             out = np.empty(len(doc_a))
             for i, (x, y) in enumerate(zip(doc_a, doc_b)):
-                # py_normalize — the SAME normalization the signature tier
-                # shingles under (incl. the \x1c-\x1f separator class), so
-                # exact-verify Jaccard is the quantity MinHash estimates
-                sa = shingle_hashes(py_normalize(x or ""), k)
-                sb = shingle_hashes(py_normalize(y or ""), k)
+                sa = shingle_hashes(x or "", k)
+                sb = shingle_hashes(y or "", k)
                 inter = np.intersect1d(sa, sb, assume_unique=True).size
                 union = sa.size + sb.size - inter
                 out[i] = inter / union if union else 1.0

@@ -302,11 +302,8 @@ def test_simhash_md5_variant_same_pairs_as_numpy(spark):
     and finds the same near-exact turn pairs as the production numpy kernel
     on whitespace/punct variants."""
     from dedup.schema import TRANSCRIPTS_SCHEMA
-    from dedup.simhash import (
-        simhash_turn_pairs,
-        with_turn_simhash,
-        with_turn_simhash_md5,
-    )
+    from dedup.simhash import simhash_turn_pairs, with_turn_simhash_md5
+    from tests.test_simhash_span import turn_simhash
 
     import datetime as dt
 
@@ -322,7 +319,7 @@ def test_simhash_md5_variant_same_pairs_as_numpy(spark):
 
     got = {}
     for name, sh in (
-        ("numpy", with_turn_simhash(df)),
+        ("numpy", turn_simhash(df)),
         ("md5", with_turn_simhash_md5(df)),
     ):
         pairs, _ = simhash_turn_pairs(sh)

@@ -238,3 +238,26 @@ def test_pow_series_cache_is_bounded():
             pow(int(base), i, 1 << 64) for i in range(5)
         ]
     assert all(a.size <= mh._POW_CACHE_MAX for a in mh._POW_CACHE.values())
+
+
+def test_exact_verify_shingles_the_signature_normalization(spark):
+    """exact_verify recomputes the Jaccard that MinHash estimates: the
+    shingles of the JVM-normalized docs. Java's whitespace class is ASCII,
+    so docs that differ only in U+00A0 versus space are NOT identical."""
+    from dedup.minhash import _normalize_expr, shingle_hashes
+
+    words = "internationalization characteristically counterrevolutionary a b".split()
+    conv = spark.createDataFrame(
+        [("a", " ".join(words)), ("b", "\xa0".join(words))], "conv_id string, doc string"
+    )
+    pairs = spark.createDataFrame(
+        [("a", "b", "lsh")], "conv_a string, conv_b string, source string"
+    )
+    cfg = DedupConfig(exact_verify=True, jaccard_threshold=0.0)
+    got = [r.similarity for r in verify_pairs(pairs, None, cfg, conversations=conv).collect()]
+
+    norm = dict(conv.select("conv_id", _normalize_expr(F.col("doc"))).collect())
+    sa, sb = (set(shingle_hashes(norm[c], cfg.shingle_k).tolist()) for c in "ab")
+    want = len(sa & sb) / len(sa | sb)
+    assert want < 1.0
+    assert got == [pytest.approx(want)]

@@ -139,6 +139,36 @@ def test_benchmark_api_still_resolves():
             )
 
 
+def test_traced_run_matches_untraced(spark, turns_df, pipeline_run):
+    """The benchmark's traced path (perfbench/trace.py wraps the layer
+    calls and forces each result) must leave the clusters unchanged, and
+    its per-span shuffle bytes must sum to the status-store total."""
+    from dedup.util import shuffle_totals
+    from perfbench.trace import PYTHON_LAYERS, Tracer, layer_table
+
+    tracer = Tracer(spark, "test")
+    before = shuffle_totals(spark)
+    tracer.install()
+    try:
+        with tracer.span("run", "pipeline"):
+            traced = _cluster_map(
+                DedupPipeline(spark, DedupConfig(), concurrent=False).run(turns_df)
+            )
+    finally:
+        tracer.uninstall()
+    after = shuffle_totals(spark)
+    assert traced == _cluster_map(pipeline_run)
+    spans = tracer.attribute()
+    assert sum(a["shuffle_write_bytes"] for a in spans.values()) == (
+        after["shuffle_write_bytes"] - before["shuffle_write_bytes"]
+    )
+    # every Python layer ran Spark work inside a span of its own, so the
+    # benchmark's per-layer table reports its Python time
+    table = layer_table(tracer, spark.sparkContext.defaultParallelism)
+    for layer in PYTHON_LAYERS:
+        assert f"{layer}.python_s" in table, layer
+
+
 def test_full_resume_runs_no_eager_tier_work(spark, turns_df, tmp_path):
     """Resuming a fully-materialized run must not construct the tier
     kernels: their eager localCheckpoints (bucket stats, simhash table,

@@ -7,7 +7,10 @@ import datetime as dt
 
 import numpy as np
 
+from dedup.assemble import assemble_conversations
 from dedup.config import DedupConfig
+from dedup.fingerprint import with_fingerprints
+from dedup.pipeline import DedupPipeline
 from dedup.schema import TRANSCRIPTS_SCHEMA
 from dedup.simhash import (
     py_simhash,
@@ -16,6 +19,7 @@ from dedup.simhash import (
     with_turn_simhash,
 )
 from dedup.suffix import (
+    doc_anchors,
     longest_common_substring_len,
     span_candidate_pairs,
     verify_span_pairs,
@@ -28,8 +32,22 @@ def _conv(cid, texts):
     return [(cid, i, "user", t, "", TS) for i, t in enumerate(texts)]
 
 
+def turn_simhash(turns):
+    """(conv_id, turn_idx, simhash) of the turns, as the pipeline derives
+    them: assembly, then the fingerprint boundary's per-turn kernel."""
+    conv = assemble_conversations(turns)
+    return with_turn_simhash(with_fingerprints(conv, kernels=("turns",)))
+
+
 def test_spark_simhash_matches_python(spark, turns_df):
-    rows = with_turn_simhash(turns_df.limit(30)).select("text", "simhash").collect()
+    rows = (
+        turn_simhash(turns_df)
+        .join(turns_df, ["conv_id", "turn_idx"])
+        .select("text", "simhash")
+        .limit(30)
+        .collect()
+    )
+    assert len(rows) == 30
     for r in rows:
         assert r.simhash == py_simhash(r.text), r.text[:40]
 
@@ -45,7 +63,7 @@ def test_near_exact_turn_pairs(spark):
         "z", ["completely different content about databases and query plans" * 3,
               "another unrelated turn talking about sorting algorithms at scale" * 3])
     df = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
-    sh = with_turn_simhash(df)
+    sh = turn_simhash(df)
     tp = {(r.conv_a, r.turn_a, r.conv_b, r.turn_b) for r in simhash_turn_pairs(sh)[0].collect()}
     assert ("a", 0, "b", 0) in tp
     assert ("a", 1, "b", 1) in tp
@@ -65,7 +83,7 @@ def test_single_shared_turn_does_not_merge_convs(spark):
                         "unrelated second turn of conversation b talking sql" * 4,
                         "unrelated third turn of conversation b talking joins" * 4])
     df = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
-    sh = with_turn_simhash(df)
+    sh = turn_simhash(df)
     tp = {(r.conv_a, r.conv_b) for r in simhash_turn_pairs(sh)[0].collect()}
     assert ("a", "b") in tp  # the turn pair IS found
     cp = {(r.conv_a, r.conv_b) for r in simhash_conv_pairs(sh).collect()}
@@ -82,15 +100,13 @@ def test_lcs_binary_search_exact():
 def test_shared_span_pipeline(spark, turns_df, corpus):
     """Planted shared-span pairs (≥4k-char common substring) are found by
     anchor blocking + LCS verification; unrelated convs are not."""
-    from dedup.assemble import assemble_conversations
-
     truth = {
         (a, b) for a, b, k in corpus.truth_pairs.itertuples(index=False) if k == "span"
     }
     assert truth
     conv = assemble_conversations(turns_df)
     cfg = DedupConfig()
-    cand, _overflow = span_candidate_pairs(conv, cfg)
+    cand, _overflow = span_candidate_pairs(doc_anchors(conv, cfg).localCheckpoint(), cfg)
     verified = verify_span_pairs(cand, conv, cfg)
     got = {(r.conv_a, r.conv_b) for r in verified.collect()}
     missing = truth - got
@@ -99,3 +115,25 @@ def test_shared_span_pipeline(spark, turns_df, corpus):
     # by construction (LCS is exact), so just sanity-check span lengths
     for r in verified.collect():
         assert r.span_len >= cfg.min_span_len
+
+
+def test_null_turn_idx_row_stays_out_of_simhash_tier(spark):
+    """A row with a null turn_idx is dropped by assembly (and counted in
+    ingest_rejects); the SimHash tier must not see it either. C's only
+    assembled turn matches D's up to case and punctuation, so C and D
+    cluster — they would not if the dropped row counted as a second,
+    unmatched turn of C (turn coverage 1/2)."""
+    t1 = "the quick brown fox jumps over the lazy dog while seven wizards hex a jovial boxer"
+    t1_variant = ", ".join(w.upper() + "!" for w in t1.split())
+    rows = [
+        ("C", 0, "user", t1, "", TS),
+        ("C", None, "user", "a second turn that assembly drops for lack of a position", "", TS),
+        ("D", 0, "user", t1_variant, "", TS),
+    ]
+    turns = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+    )
+    res = DedupPipeline(spark, DedupConfig(), enable_span=False).run(turns)
+    m = {r.conv_id: r.cluster_id for r in res.clusters.collect()}
+    assert m.get("C") is not None and m.get("C") == m.get("D"), m
+    assert res.metrics["ingest_rejects"]["null_turn_idx"] == 1
